@@ -230,17 +230,16 @@ def main() -> int:
     # previous window forward means an op can only leave the printed map
     # by actually failing or being removed. The whole line must stay
     # under the driver's 2000-char stdout capture (round 1's 5 KB line
-    # lost its head and parsed as null), so prev-window names are
-    # mandatory and extra current-slowest entries fill the remaining
-    # byte budget in descending-time order.
+    # lost its head and parsed as null), so prev-window names come
+    # first, extra current-slowest entries fill the remaining byte
+    # budget in descending-time order, and if the carried names alone
+    # overflow it the fastest of them are cut too (``fit_window``).
     prev_window: list[str] = []
     try:
         with open(os.path.join(REPO, "bench_window.json")) as f:
             prev_window = [n for n in json.load(f) if n in per_query]
     except Exception:  # noqa: BLE001 — seed file is optional
         pass
-    by_slowest = sorted(per_query.items(), key=lambda kv: -kv[1])
-    extras = [n for n, _ in by_slowest[:40] if n not in set(prev_window)]
 
     def _line(sel: dict[str, float]) -> str:
         return json.dumps(
@@ -261,13 +260,26 @@ def main() -> int:
             separators=(",", ":"),
         )
 
-    names = prev_window + extras  # extras already descending by time
-    sel = {n: per_query[n] for n in names}
-    while len(_line(sel)) > 1900 and len(names) > len(prev_window):
-        names.pop()  # drop the fastest non-mandatory extras first
-        sel = {n: per_query[n] for n in names}
-    print(_line(sel))
+    print(_line(fit_window(per_query, prev_window, _line)))
     return 0
+
+
+def fit_window(
+    per_query: dict[str, float], prev_window: list[str], line, cap: int = 1900
+) -> dict[str, float]:
+    """The printed window: ``prev_window`` names, then the slowest 40 not
+    among them, cut until ``line(window)`` is at most ``cap`` chars. The
+    fastest extras go first; if the carried-forward names alone are
+    still too long, they go too, fastest first."""
+    by_slowest = sorted(per_query, key=lambda n: -per_query[n])
+    carried = set(prev_window)
+    extras = [n for n in by_slowest[:40] if n not in carried]
+    sel = {n: per_query[n] for n in prev_window + extras}
+    for n in extras[::-1] + sorted(prev_window, key=per_query.get):
+        if len(line(sel)) <= cap:
+            break
+        del sel[n]
+    return sel
 
 
 if __name__ == "__main__":

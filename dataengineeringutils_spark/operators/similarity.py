@@ -10,8 +10,10 @@
 
 Exactness: dot products and norms are computed float->double element-wise
 in array order (``zip_with`` + ``aggregate`` in Spark, ``list_transform``
-+ ``list_sum`` in DuckDB) — the same IEEE operations in the same order,
-so cosine values hash-match bit-for-bit with no rounding.
++ ``list_sum`` in DuckDB, ``np_cosine`` in numpy kernels) — the same IEEE
+operations in the same order, so cosine values hash-match bit-for-bit
+with no rounding. The numpy twin lets a vectorised Arrow kernel score
+candidates and re-rank them without the interpreted per-row cosine.
 
 Scale design: the brute-force ops bound one side (a query set / a
 broadcast vector); the all-pairs op uses LSH bucketing so candidate
@@ -59,6 +61,43 @@ def o_norm(a: str) -> str:
 
 def o_cosine(a: str, b: str) -> str:
     return f"{o_dot(a, b)} / ({o_norm(a)} * {o_norm(b)})"
+
+
+def np_cosine(a, b) -> np.ndarray:
+    """``cosine()`` in numpy, bit for bit: float->double, and each dot
+    product accumulates ``acc + x*y`` over the last axis in array order
+    from 0.0, as ``aggregate(zip_with(...))`` does. Leading axes
+    broadcast, so a (n, dim) block scores against one (dim,) query or
+    row-aligned (n, dim) queries in one call."""
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    shape = np.broadcast_shapes(a.shape[:-1], b.shape[:-1])
+    ab, aa, bb = np.zeros(shape), np.zeros(shape), np.zeros(shape)
+    for i in range(a.shape[-1]):
+        x, y = a[..., i], b[..., i]
+        ab += x * y
+        aa += x * x
+        bb += y * y
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return ab / (np.sqrt(aa) * np.sqrt(bb))
+
+
+def _arrow_matrix(col) -> np.ndarray:
+    """(rows, dim) float64 matrix of a non-empty Arrow list<float> column
+    whose lists all have the same length (an embedding column)."""
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(col), -1)
+
+
+def _per_query_topk(q_ids, vec_ids, cos, k):
+    """Row positions of the top-``k`` per query under (cos DESC, vec_id
+    ASC) — the re-rank window's order, NaN first as Spark sorts it."""
+    order = np.lexsort((vec_ids, -cos, ~np.isnan(cos), q_ids))
+    qs = q_ids[order]
+    pos = np.arange(len(qs))
+    starts = np.r_[True, qs[1:] != qs[:-1]]
+    first = np.maximum.accumulate(np.where(starts, pos, 0))
+    return order[pos - first < k]
 
 
 # -- fixed-size deterministic probe panels -----------------------------------
@@ -357,7 +396,33 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_topk_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LSH search plan (bucket join -> dedup -> exact re-rank),
-    reading signatures from the persisted index artifact."""
+    reading signatures from the persisted index artifact.
+
+    The re-rank scores candidates in an Arrow kernel against the raw
+    query panel (a closure, no query-vector join) with ``np_cosine``,
+    bit-identical to ``cosine()``, and each batch emits only its top-3
+    per query; the final ``row_number`` over that small union gives the
+    same global top-3 as ranking every candidate."""
+    import pyarrow as pa
+
+    q_ids, q_raw = _query_panel(spark, sf_dir)
+
+    def rerank(batches, q_ids=q_ids, q_raw=q_raw):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            qid = b.column("q_id").to_numpy()
+            vid = b.column("vec_id").to_numpy()
+            cos = np_cosine(
+                _arrow_matrix(b.column("embedding")),
+                q_raw[np.searchsorted(q_ids, qid)],
+            )
+            top = _per_query_topk(qid, vid, cos, 3)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(qid[top]), pa.array(vid[top]), pa.array(cos[top])],
+                names=["q_id", "vec_id", "cos_sim"],
+            )
+
     e = table(spark, sf_dir, "embeddings")
     sig = _lsh_signatures_cached(spark, sf_dir)
     q = sig.filter(F.col("vec_id") < 20).select(
@@ -366,8 +431,8 @@ def _lsh_topk_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").alias("q_bucket"),
     )
     # Dedup candidates on (q_id, vec_id) IDS ONLY — a distinct over the
-    # 64-float embedding arrays would shuffle vectors 16x; the vectors
-    # rejoin once per SIDE after the dedup (both joins broadcast-small).
+    # 64-float embedding arrays would shuffle vectors 16x; the corpus
+    # vectors rejoin once after the dedup (broadcast-small id side).
     cand_ids = (
         sig.join(
             F.broadcast(q),
@@ -378,11 +443,11 @@ def _lsh_topk_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "vec_id")
         .distinct()
     )
-    q_emb = e.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    scored = (
+        e.join(F.broadcast(cand_ids), "vec_id")
+        .select("q_id", "vec_id", "embedding")
+        .mapInArrow(rerank, "q_id long, vec_id long, cos_sim double")
     )
-    cand = e.join(F.broadcast(cand_ids), "vec_id").join(F.broadcast(q_emb), "q_id")
-    scored = cand.select("q_id", "vec_id", cosine("embedding", "q_emb").alias("cos_sim"))
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -415,10 +480,11 @@ def sim_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact side via the shared block-GEMM nomination helper (see
     # sim_block_matmul_topk): the 20-query panel broadcasts as a 20x64
     # closure, each Arrow batch of the corpus is one BLAS matmul, and
-    # only per-block top-depth candidate IDS leave Python — replaces the
+    # only per-block top-depth candidates leave Python, scored with
+    # ``np_cosine`` (the oracle's sequential-order cosine) — replaces the
     # former crossJoin whose interpreted HOF cosines dominated this op's
-    # bench time (round-6 VERDICT #2a); the engine re-ranks winners with
-    # the same sequential-order cosine the oracle uses. Both the exact
+    # bench time (round-6 VERDICT #2a); the engine re-ranks the
+    # nominations by those exact values. Both the exact
     # ground truth and the LSH search run INSIDE this timed plan; only
     # the signature index and the query panel persist (round-11 VERDICT
     # item 2).
@@ -1039,12 +1105,19 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for c in range(4)
             ]
         )
+        # A cluster that emptied in iteration 0 has no centroid rows, so
+        # its d{c} is NULL — and a NULL field sorts first in the struct
+        # order, which would hand it every vector. +inf never wins, as
+        # the oracle's join (no centroid, no candidate row) never does.
         assign = d.select(
             "vec_id",
             F.least(
                 *[
                     F.struct(
-                        F.col(f"d{c}").alias("dst"), F.lit(c).alias("cid")
+                        F.coalesce(F.col(f"d{c}"), F.lit(float("inf"))).alias(
+                            "dst"
+                        ),
+                        F.lit(c).alias("cid"),
                     )
                     for c in range(4)
                 ]
@@ -2403,11 +2476,14 @@ def _ivf_recall_block_sql(nprobe: int) -> str:
 RECALL_NPROBES = (1, 2, 4)
 
 def _query_panel(spark: SparkSession, sf_dir: str):
-    """Driver-side (ids, row-normalized float64 matrix) for the
+    """Driver-side (ids ascending, raw float64 matrix) for the
     vec_id < 20 query panel, persisted per fixture as a JSON artifact
     (floats round-trip exactly through json repr). The panel is eval
     INPUT — the 20 query vectors themselves, not anything computed from
-    the corpus — shared by every exact-ground-truth consumer."""
+    the corpus — shared by the exact ground truth and the LSH re-rank.
+    Raw, not normalized: ``np_cosine`` needs the stored values, and a
+    caller that normalizes after loading gets the bits it would have
+    got from normalizing before storing."""
     from dataengineeringutils_spark.artifacts import json_artifact
 
     def _panel():
@@ -2423,7 +2499,6 @@ def _query_panel(spark: SparkSession, sf_dir: str):
         mat = np.stack(q_pdf["embedding"].to_numpy()[order]).astype(
             np.float64
         )
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
         return [ids.tolist(), mat.tolist()]
 
     ids_l, mat_l = json_artifact(sf_dir, "lsh_recall_panel", _panel)
@@ -2442,56 +2517,51 @@ def _exact_topk_inplan(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     ground truth is now timed with its consumers. It stays cheap the
     honest way (guide §4.2): block-GEMM nomination — each Arrow batch
     of the corpus is ONE BLAS matmul against the 20x64 panel and only
-    per-block top-``depth`` candidate IDS leave Python — followed by an
-    engine re-rank of the nominated union with the same
-    sequential-order cosine the oracles use. depth >> k keeps the
+    per-block top-``depth`` candidates leave Python, each with its exact
+    ``np_cosine`` against the raw query (bit-identical to ``cosine()``,
+    so no join back to the corpus) — followed by an engine
+    ``row_number`` re-rank of the nominated union. depth >> k keeps the
     nomination exact (a global top-k member is inside its block's
     top-depth under any ulp-level score disagreement)."""
-    import pandas as pd
+    import pyarrow as pa
 
-    q_ids, q_mat = _query_panel(spark, sf_dir)
+    q_ids, q_raw = _query_panel(spark, sf_dir)
+    q_mat = q_raw / np.linalg.norm(q_raw, axis=1, keepdims=True)
     depth = max(2 * k, 8)
 
-    def nominate(batches, q_ids=q_ids, q_mat=q_mat, depth=depth):
+    def nominate(batches, q_ids=q_ids, q_raw=q_raw, q_mat=q_mat, depth=depth):
         cap_blas_threads(1)  # one BLAS thread per worker = task's share
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            bord = np.argsort(
-                np.asarray(pdf["vec_id"], dtype=np.int64), kind="stable"
+            ids = b.column("vec_id").to_numpy()
+            bord = np.argsort(ids, kind="stable")
+            ids = ids[bord]
+            raw = _arrow_matrix(b.column("embedding"))[bord]
+            mat = raw / np.linalg.norm(raw, axis=1, keepdims=True)
+            # rows are id-sorted, so ranking positions ties on vec_id ASC
+            pos, d = _block_topk_rows(
+                np.arange(len(ids)), q_mat @ mat.T, depth
             )
-            ids = np.asarray(pdf["vec_id"], dtype=np.int64)[bord]
-            mat = np.stack(pdf["embedding"].to_numpy()[bord]).astype(
-                np.float64
-            )
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            top, d = _block_topk_rows(ids, q_mat @ mat.T, depth)
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(q_ids, d),
-                    "vec_id": top.reshape(len(q_ids) * d),
-                }
+            cos = np_cosine(raw[pos], q_raw[:, None, :])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(q_ids, d)),
+                    pa.array(ids[pos].reshape(-1)),
+                    pa.array(cos.reshape(-1)),
+                ],
+                names=["q_id", "vec_id", "cos_sim"],
             )
 
-    e = table(spark, sf_dir, "embeddings")
     # no dedup needed: every vec_id lives in exactly one Arrow batch of
     # the scan, so (q_id, vec_id) nominations are unique by construction
     # — the former .distinct() was a pure extra exchange (guide §2.4:
     # "a distinct on data that is already unique")
-    cand = (
-        e.select("vec_id", "embedding")
-        .mapInPandas(nominate, "q_id long, vec_id long")
-        .filter(F.col("q_id") != F.col("vec_id"))
-    )
-    q_emb = e.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
     scored = (
-        cand.join(e.select("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(q_emb), "q_id")
-        .select(
-            "q_id", "vec_id", cosine("embedding", "q_emb").alias("cos_sim")
-        )
+        table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .mapInArrow(nominate, "q_id long, vec_id long, cos_sim double")
+        .filter(F.col("q_id") != F.col("vec_id"))
     )
     w_q = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id").asc()

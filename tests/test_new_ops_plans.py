@@ -311,6 +311,7 @@ def test_lsh_signatures_are_arrow_batched(spark, sf_dir):
     # the signature kernel (the INDEX build) must be a vectorized Arrow
     # mapInPandas, not a per-row Python UDF
     from dataengineeringutils_spark.operators.similarity import (
+        _exact_topk_inplan,
         _lsh_signature_kernel,
         _lsh_topk,
     )
@@ -332,6 +333,12 @@ def test_lsh_signatures_are_arrow_batched(spark, sf_dir):
     search = _plan(_lsh_topk(spark, sf_dir))
     assert "MapInPandas" not in search, search
     assert "Scan parquet" in search, search
+    # candidate scoring is the np_cosine Arrow kernel, in the LSH re-rank
+    # and in the exact top-k nomination: no interpreted per-row cosine
+    for plan in (search, _plan(_exact_topk_inplan(spark, sf_dir, 10))):
+        assert "MapInArrow" in plan, plan
+        assert "zip_with" not in plan, plan
+        assert "aggregate(" not in plan, plan
 
 
 def test_dpp_join_prunes_partitions(spark, sf_dir):

@@ -86,3 +86,24 @@ def test_bench_transient_classifier():
         StreamingQueryException("query terminated: column not found")
     )
     assert not _is_transient(ConnectionResetError("Connection reset by peer"))
+
+
+def test_bench_window_line_is_capped_when_carried_names_overflow():
+    """The carried-forward window grows every round; once its names
+    alone pass the cap they are cut too, fastest first, so the printed
+    line still fits a 2000-char stdout capture."""
+    import json
+
+    from bench import fit_window
+
+    per_query = {f"carried_forward_op_{i:03d}": 0.01 * (i + 1) for i in range(120)}
+    prev_window = list(per_query)
+
+    def line(sel):
+        return json.dumps({"queries": sel}, separators=(",", ":"))
+
+    assert len(line({n: per_query[n] for n in prev_window})) > 1900
+    sel = fit_window(per_query, prev_window, line)
+    assert len(line(sel)) <= 1900
+    kept = sorted(per_query, key=per_query.get)[-len(sel):]
+    assert set(sel) == set(kept)  # the slowest survive

@@ -61,7 +61,7 @@ ALLOWLIST: dict[str, tuple[str, str]] = {
     "orders_seasonal_decompose": ("agg", "|month| frame"),
     "orders_share_of_parent_hierarchy": ("agg", "|clerk|/|month| rollup"),
     "orders_yoy_growth": ("agg", "|month| frame"),
-    "sim_kmeans_lloyd": ("agg", "k-row centroid frame"),
+    "sim_kmeans_lloyd": ("topk", "k-row seed frame (TakeOrderedAndProject)"),
     "surv_kaplan_meier": ("agg", "|distinct day| risk table"),
     "text_token_head_coverage": ("topk", "top-10k head of the vocab frame"),
     "topn_with_other": ("agg", "|group| frame before top-N cut"),
