@@ -6,7 +6,8 @@ Prints ONE JSON line:
 
 Env:
   SPARK_GRAFT_SF_DIR  fixture dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local cores (default 32)
+  SPARK_GRAFT_CPUS    local cores (default: the process's CPU affinity
+                      mask, session.local_cpus)
   BENCH_REPEAT        timed repeats per query, best-of (default 3)
 
 Methodology (BASELINE.md): one shared warm SparkSession (JVM startup

@@ -23,7 +23,7 @@ from dataengineeringutils_spark.exprs import (
     o_money_sum,
 )
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import spread_small_scan, table
+from dataengineeringutils_spark.tables import spread, table
 
 
 @query(
@@ -44,18 +44,14 @@ from dataengineeringutils_spark.tables import spread_small_scan, table
 )
 def agg_group_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B17: TPC-H Q1 shape — multi-aggregate group-by on the fact table."""
-    li = table(spark, sf_dir, "lineitem").filter(
+    # spread so the six decimal aggregates parallelize (decimal sums are
+    # order-independent, so the spread cannot change a value)
+    li = spread(spark, sf_dir, "lineitem", "l_orderkey").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     ).select(
         "l_orderkey", "l_returnflag", "l_linestatus", "l_quantity",
         "l_extendedprice", "l_discount",
     )
-    # size-gated spread of the single-split fixture scan so the six
-    # decimal aggregates parallelize (decimal sums are order-
-    # independent); identity past one scan split, so the plan at scale
-    # is Scan -> partial agg -> |groups|-row exchange with NO fact-scale
-    # movement (round-11 VERDICT item 1)
-    li = spread_small_scan(spark, sf_dir, "lineitem", li, "l_orderkey")
     disc_price = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         money_sum("l_quantity").alias("sum_qty"),
@@ -309,12 +305,9 @@ def agg_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB version is identical — decimal sums are associative, so
     partial aggregation is lossless.
     """
-    li = table(spark, sf_dir, "lineitem").select(
+    li = spread(spark, sf_dir, "lineitem", "l_orderkey").select(
         "l_orderkey", "l_returnflag", "l_extendedprice", "l_discount"
     )
-    # size-gated spread of the single-split fixture scan (identity past
-    # one scan split — no fact-scale exchange at production size)
-    li = spread_small_scan(spark, sf_dir, "lineitem", li, "l_orderkey")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     disc = F.col("l_discount").cast("decimal(18,2)")
     return li.groupBy("l_returnflag").agg(
@@ -499,11 +492,9 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale that's what you store, because pairs re-merge (e.g. daily →
     monthly) while finished averages don't.
     """
-    li = table(spark, sf_dir, "lineitem").select(
+    li = spread(spark, sf_dir, "lineitem", "l_orderkey").select(
         "l_orderkey", "l_returnflag", "l_extendedprice", "l_quantity"
     )
-    # same size-gated spread as agg_decimal_exact above
-    li = spread_small_scan(spark, sf_dir, "lineitem", li, "l_orderkey")
     num = F.sum(
         F.col("l_extendedprice").cast("decimal(18,2)")
         * F.col("l_quantity").cast("decimal(18,2)")

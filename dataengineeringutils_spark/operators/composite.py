@@ -27,7 +27,7 @@ from dataengineeringutils_spark.exprs import (
     revenue,
 )
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import spread_small_scan, table
+from dataengineeringutils_spark.tables import spread, table
 
 
 @query(
@@ -1562,10 +1562,9 @@ def lineitem_margin_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     table exceeds one scan split, so at production scale the plan has
     no fact-scale exchange before the partial aggregate.
     """
-    li = table(spark, sf_dir, "lineitem").select(
+    li = spread(spark, sf_dir, "lineitem", "l_orderkey").select(
         "l_orderkey", "l_shipdate", "l_extendedprice", "l_discount", "l_tax"
     )
-    li = spread_small_scan(spark, sf_dir, "lineitem", li, "l_orderkey")
     return li.groupBy(
         F.date_trunc("month", F.col("l_shipdate").cast("date")).alias("month")
     ).agg(
@@ -2053,12 +2052,9 @@ def lineitem_discount_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts back from the same collapsed frame via a 1-row cross
     join — one fact-table scan total.
     """
-    li = table(spark, sf_dir, "lineitem").select(
+    li = spread(spark, sf_dir, "lineitem", "l_orderkey").select(
         "l_orderkey", "l_discount", "l_quantity", "l_extendedprice"
     )
-    # size-gated spread of the single-split fixture scan (identity past
-    # one scan split; same rationale as lineitem_discount_depth_mix)
-    li = spread_small_scan(spark, sf_dir, "lineitem", li, "l_orderkey")
     net = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(22,4)"
     )
@@ -3070,12 +3066,10 @@ def customer_supplier_switching(
     layout of ``sink_bucketed_join``) is the shape — either way the
     declared result is identical.
     """
-    li = table(spark, sf_dir, "lineitem").select(
+    # spread so the join + map-side set collapse parallelize
+    li = spread(spark, sf_dir, "lineitem", "l_orderkey").select(
         "l_orderkey", "l_partkey", "l_suppkey"
     )
-    # size-gated spread of the single-split fixture scan so the join +
-    # map-side set collapse parallelize (identity past one scan split)
-    li = spread_small_scan(spark, sf_dir, "lineitem", li, "l_orderkey")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cps = (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -3164,9 +3158,6 @@ def part_demand_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize each part's ADI/CV² at 10⁻⁶ into int64 before summing
     (order-independent). Facts shuffle twice, both times as counters.
     """
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_shipdate", "l_quantity"
-    )
     # The part-day collapse barely reduces (nearly one group per row), so
     # the scan-stage partial hash-agg builds a ~|rows| hash table on the
     # ONE task that scans the single-row-group fixture file — the whole
@@ -3177,8 +3168,11 @@ def part_demand_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AND hash-partitioning by l_partkey satisfies BOTH downstream
     # groupBys — the per-part collapse needs no second exchange
     # (1.46 s → 0.63 s at sf0.1; exact DECIMAL/int sums, so the
-    # order change cannot alter any value).
-    li = li.repartition(spark.sparkContext.defaultParallelism, "l_partkey")
+    # order change cannot alter any value). Size-gated: past one scan
+    # split the scan is parallel and the partial agg reduces first.
+    li = spread(spark, sf_dir, "lineitem", "l_partkey").select(
+        "l_partkey", "l_shipdate", "l_quantity"
+    )
     daily = li.groupBy(
         "l_partkey",
         F.date_trunc("day", "l_shipdate").cast("date").alias("d"),
@@ -3513,10 +3507,9 @@ def lineitem_intra_order_price_dispersion(
     groupBy (no second exchange), and decimal sums are
     order-independent.
     """
-    li = table(spark, sf_dir, "lineitem").select(
+    li = spread(spark, sf_dir, "lineitem", "l_orderkey").select(
         "l_orderkey", "l_extendedprice"
     )
-    li = li.repartition(spark.sparkContext.defaultParallelism, "l_orderkey")
     dp = F.col("l_extendedprice").cast("decimal(18,2)")
     per_order = (
         li.groupBy("l_orderkey")
@@ -3935,13 +3928,10 @@ def supplier_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-run the fact join+agg — Catalyst does not share duplicate
     subtrees.
     """
-    li = table(spark, sf_dir, "lineitem").select(
+    # spread so the broadcast join + decimal sums parallelize
+    li = spread(spark, sf_dir, "lineitem", "l_suppkey").select(
         "l_suppkey", "l_extendedprice", "l_quantity"
     )
-    # size-gated spread of the single-split fixture scan so the
-    # broadcast join + decimal sums parallelize locally; identity past
-    # one scan split, so no fact-scale exchange at production size
-    li = spread_small_scan(spark, sf_dir, "lineitem", li, "l_suppkey")
     s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     lines = (
@@ -4409,10 +4399,9 @@ def lineitem_discount_depth_mix(
     past one scan split the spread is the identity, so the plan at
     scale has no exchange before the partial aggregate).
     """
-    li = table(spark, sf_dir, "lineitem").select(
+    li = spread(spark, sf_dir, "lineitem", "l_orderkey").select(
         "l_orderkey", "l_discount", "l_extendedprice", "l_quantity"
     )
-    li = spread_small_scan(spark, sf_dir, "lineitem", li, "l_orderkey")
     depth = (
         F.when(F.col("l_discount") == 0, "none")
         .when(F.col("l_discount") <= 0.05, "shallow")

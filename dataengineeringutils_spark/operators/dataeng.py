@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table, ts_bounds
+from dataengineeringutils_spark.tables import spread, table, ts_bounds
 
 _DEC = "decimal(18,2)"
 
@@ -625,13 +625,12 @@ def orders_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     math across all cores, and the hash partitioning already satisfies
     the groupBy (no second exchange). Exact decimal sums are
     order-independent, so the result cannot change. Measured 1.13 s vs
-    2.5 s A/B (same session). At 100 TB the input is many files and the
-    repartition is dropped — same note as ``docs_parallel``.
+    2.5 s A/B (same session). The spread is size-gated
+    (``tables.spread``): past one scan split there is no extra exchange.
     """
     li = (
-        table(spark, sf_dir, "lineitem")
+        spread(spark, sf_dir, "lineitem", "l_orderkey")
         .select("l_orderkey", "l_extendedprice", "l_discount")
-        .repartition(spark.sparkContext.defaultParallelism, "l_orderkey")
         .groupBy("l_orderkey")
         .agg(
             F.count("*").alias("n_lines"),

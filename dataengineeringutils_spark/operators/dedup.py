@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import spread, table
 
 N_HASHES = 64  # MinHash signature length
 N_BANDS = 16  # LSH bands (r = 64/16 = 4 rows/band) -> ~0.5 sim threshold
@@ -38,19 +38,6 @@ JACCARD_THRESHOLD = 0.5
 # pairs. 128 is far above any organic near-dup shingle (fixture max df: 25
 # at sf0.1) so capped == uncapped on real near-dups; pinned by test.
 MAX_SHINGLE_DF = 128
-
-
-def docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents, spread across all cores.
-
-    The fixture table is ONE parquet file, which Spark scans as one
-    partition — so the expensive per-row work (tokenize, shingle, hash)
-    would run on a single core. One round-robin repartition up front costs
-    a small shuffle of raw text and parallelizes everything downstream.
-    At 100 TB the input is thousands of files and this becomes a no-op
-    (remove it, or guard on ``df.rdd.getNumPartitions()``)."""
-    d = table(spark, sf_dir, "documents")
-    return d.repartition(spark.sparkContext.defaultParallelism)
 
 
 def tokens_col(text: str = "text"):
@@ -87,7 +74,7 @@ def shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "dedup_shingles",
-        lambda: _shingles_of(docs_parallel(spark, sf_dir)),
+        lambda: _shingles_of(spread(spark, sf_dir, "documents")),
     )
 
 
@@ -112,6 +99,16 @@ def _shingles_of(d: DataFrame) -> DataFrame:
 
 
 HOT_SAMPLE_FRACTION = 0.125
+_SAMPLE_BUCKETS = 1 << 20
+
+
+def sample_docs(docs: DataFrame, fraction: float) -> DataFrame:
+    """The ``fraction`` of ``docs`` whose seeded ``doc_id`` hash falls in
+    the low buckets. A function of ``doc_id`` alone, so the same docs
+    are drawn under any partition layout (a per-task RNG sample is not:
+    it changes with the partition count and with a spread)."""
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(_SAMPLE_BUCKETS))
+    return docs.filter(bucket < int(fraction * _SAMPLE_BUCKETS))
 
 
 def hot_shingle_stoplist(
@@ -133,9 +130,7 @@ def hot_shingle_stoplist(
     from dataengineeringutils_spark.artifacts import df_artifact
 
     def _build():
-        sample = docs_parallel(spark, sf_dir).sample(
-            fraction=fraction, seed=42
-        )
+        sample = sample_docs(spread(spark, sf_dir, "documents"), fraction)
         threshold = max(1, int(max_doc_freq * fraction))
         return (
             _shingles_of(sample)
@@ -602,7 +597,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the fingerprint table is a persisted corpus artifact (one
         # tokenize+kernel pass per corpus snapshot, like the MinHash OPH
         # state); the band join + Hamming verify below stay live per call
-        d = docs_parallel(spark, sf_dir)
+        d = spread(spark, sf_dir, "documents")
         tok = d.select(
             "doc_id", F.explode(F.array_distinct(tokens_col())).alias("tok")
         )
@@ -695,7 +690,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _grp():
         return (
-            docs_parallel(spark, sf_dir)
+            spread(spark, sf_dir, "documents")
             .select("doc_id", "text")
             .groupBy("text")
             .agg(

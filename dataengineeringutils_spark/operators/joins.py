@@ -22,7 +22,7 @@ from pyspark.sql.window import Window
 
 from dataengineeringutils_spark.exprs import money_sum, o_money_sum
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import spread, table
 
 
 @query(
@@ -504,12 +504,17 @@ def join_fuzzy_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # bounded registry slice (the blocking math, not the volume, is the
     # demonstration; at sf0.1 the unbounded version pays 3.7M lev calls)
+    in_slice = F.col("c_custkey") < 3000
     c = (
         table(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") < 3000)
+        .filter(in_slice)
         .select("c_custkey", "c_name")
     )
-    dirty = c.select(
+    # the probe side scans as ONE task (one-row-group fixture file), so
+    # the blocked join's lev fan-out would serialize; a size-gated
+    # round-robin spread of the dirty side parallelizes every
+    # candidate's distance eval
+    dirty = spread(spark, sf_dir, "customer").filter(in_slice).select(
         F.col("c_custkey").alias("d_key"),
         F.when(
             F.col("c_custkey") % 2 == 0,
@@ -540,13 +545,7 @@ def join_fuzzy_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicate, while struct ordering (lev ASC, then key ASC) is
     # exactly the old window's (row_number = 1) selection. One narrow
     # exchange replaces the distinct shuffle + window sort.
-    # the probe side scans as ONE task (one-row-group fixture file), so
-    # the blocked join's lev fan-out would serialize; a round-robin
-    # spread of the 1.5k-row dirty side parallelizes every candidate's
-    # distance eval (same note as docs_parallel)
-    d_b = dirty.select("d_key", "d_name", *blocks(F.col("d_name"))).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d_b = dirty.select("d_key", "d_name", *blocks(F.col("d_name")))
     c_b = c.select("c_custkey", "c_name", *blocks(F.col("c_name")))
     lev = F.levenshtein("d_name", "c_name")
 

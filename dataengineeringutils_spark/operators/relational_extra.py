@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import spread, table
 
 # ---------------------------------------------------------------------------
 # aggregates
@@ -1044,13 +1044,11 @@ def sample_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     |replicates| exact-DECIMAL sums; replicate means quantize at 10⁻⁶
     into int64 so the SE arithmetic is order-independent shared text.
     """
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     # Fixture tables are single parquet files -> one scan partition, and
     # everything up to the 16-group partial agg is map-side: spread rows
-    # first (profile_summary's guard; measured 1.6 -> 0.62 s at sf0.1).
-    # On a real multi-file lake the scan is already parallel and this
-    # repartition is a no-op to remove.
-    o = o.repartition(spark.sparkContext.defaultParallelism)
+    # first (measured 1.6 -> 0.62 s at sf0.1; size-gated, so a
+    # multi-split table keeps its parallel scan and no exchange).
+    o = spread(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     # two md5 digests per ROW (not per draw): each 32-hex digest carries
     # eight independent 16-bit slices, so the 16 replicate uniforms cost
     # 2 hashes instead of 16 — the hash is the hot path at 16x fan-out.

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from dataengineeringutils_spark.blas import cap_blas_threads
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import spread, table
 
 
 def dot(a: str | Column, b: str | Column) -> Column:
@@ -238,14 +238,14 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus across cores first (tiny shuffle of raw vectors) so the HOF
     # arithmetic runs parallel; the row_number top-5 is group-limited
     # map-side either way (guide §2 stragglers / §4 per-row work).
-    base = table(spark, sf_dir, "embeddings")
-    e = (
-        base.repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", "embedding", l2_norm("embedding").alias("nrm"))
+    e = spread(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding", l2_norm("embedding").alias("nrm")
     )
     # broadcast side from the RAW scan (50 rows, vec_id pushed down) so
     # the tiny query frame never rides the corpus repartition exchange
-    q = base.filter(F.col("vec_id") < 50).select(
+    q = table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") < 50
+    ).select(
         "vec_id", "embedding", l2_norm("embedding").alias("nrm")
     ).select(
         F.col("vec_id").alias("q_id"),

@@ -22,12 +22,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dataengineeringutils_spark.operators.dedup import (
-    docs_parallel,
     shingle_rows,
     tokens_col,
 )
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import spread, table
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for")
 
@@ -374,12 +373,10 @@ def text_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~doc length — it pipelines inside the scan stage, and the map-side
     combine collapses to |lang|x|gram| before any shuffle. The fixture
     is ONE parquet file (one scan partition), so the |chars|-row fan-out
-    would run on a single core — spread the docs first (a no-op to
-    remove on a real multi-file lake; cf. ``docs_parallel``).
+    would run on a single core — spread the docs first (size-gated:
+    identity on a multi-split table; see ``tables.spread``).
     """
-    from dataengineeringutils_spark.operators.dedup import docs_parallel
-
-    d = docs_parallel(spark, sf_dir).filter(F.length("text") >= 3)
+    d = spread(spark, sf_dir, "documents").filter(F.length("text") >= 3)
     grams = (
         d.select("lang", "text", F.explode(F.sequence(F.lit(1), F.length("text") - 2)).alias("i"))
         .select("lang", F.expr("substring(text, i, 3)").alias("gram"))
@@ -570,9 +567,7 @@ def text_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     key (benchmark side is tiny, so the gram join is broadcast); corpus
     grams never shuffle. Counts roll up per language for the report.
     """
-    from dataengineeringutils_spark.operators.dedup import docs_parallel
-
-    d = docs_parallel(spark, sf_dir)
+    d = spread(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.posexplode(tokens_col()).alias("pos", "tok"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     lead_cols = [F.lead("tok", i).over(w).alias(f"t{i}") for i in range(1, CONTAM_N)]
@@ -638,9 +633,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     as exact DECIMAL sums so the cross-engine hash cannot wobble on
     float merge order.
     """
-    from dataengineeringutils_spark.operators.dedup import docs_parallel
-
-    d = docs_parallel(spark, sf_dir)
+    d = spread(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens_col()).alias("tok"))
     freq = tok.groupBy("tok").agg(F.count("*").alias("c"))
     total = freq.agg(F.sum("c").cast("double").alias("n"))
@@ -897,12 +890,12 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc's tokens at a time — the measured rule is lambdas on SMALL
     arrays are fine; corpora scale by adding rows, not array length.
     """
-    # docs_parallel: the zip_with chains below are the op's whole cost
+    # spread: the zip_with chains below are the op's whole cost
     # and evaluate in the scan stage — one task on the single-row-group
     # fixture file (and TWICE: the orderBy's range sampler evaluates the
     # projection too). Spreading raw text across cores first parallelizes
     # both passes (guide §2 stragglers).
-    d = docs_parallel(spark, sf_dir).select(
+    d = spread(spark, sf_dir, "documents").select(
         "doc_id", F.filter(F.split("text", " "), lambda t: t != F.lit("")).alias("tk")
     )
     tk = F.col("tk")
@@ -1052,9 +1045,9 @@ def text_boilerplate_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash agg + TakeOrdered. At 100 TB the HAVING floor prunes the
     singleton long tail before anything sorts.
     """
-    # docs_parallel: the zip_with phrase build + array_distinct dominate
+    # spread: the zip_with phrase build + array_distinct dominate
     # and would otherwise run on the single scan task (guide §2)
-    d = docs_parallel(spark, sf_dir).select(
+    d = spread(spark, sf_dir, "documents").select(
         "doc_id",
         F.filter(F.split("text", " "), lambda t: t != F.lit("")).alias("tk"),
     )
@@ -1313,9 +1306,7 @@ def text_lm_score_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a deterministic comparison on the 4-dp-rounded score in both
     engines.
     """
-    from dataengineeringutils_spark.operators.dedup import docs_parallel
-
-    d = docs_parallel(spark, sf_dir)
+    d = spread(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens_col()).alias("tok"))
     freq = tok.groupBy("tok").agg(F.count("*").alias("c"))
     total = freq.agg(F.sum("c").cast("double").alias("n"))
@@ -1779,9 +1770,9 @@ def text_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from dataengineeringutils_spark.operators.dedup import tokens_col
 
-    # docs_parallel: gram fan-out + per-gram md5 dominate and would
+    # spread: gram fan-out + per-gram md5 dominate and would
     # otherwise evaluate on the single scan task (guide §2)
-    d = docs_parallel(spark, sf_dir)
+    d = spread(spark, sf_dir, "documents")
     # the >= 5 guard matters: Spark's sequence(1, 0) is DESCENDING
     # [1, 0], not empty like DuckDB's range(1, 1) — a 4-token doc would
     # emit phantom grams without it

@@ -5,7 +5,7 @@ here the session *is* the engine, so the scale-relevant knobs live in one
 place. Settings marked [scale] are the ones that matter on a real cluster
 against ~100 TB; the local values are chosen so the same code paths
 (AQE, skew-join, partial agg, broadcast selection) are exercised on
-local[32].
+local[N], N = the cores this process may run on.
 
 Deployment seams (see README "Cluster deployment"):
 - ``SPARK_GRAFT_ON_CLUSTER``: when set, get_spark() applies ONLY the
@@ -15,7 +15,11 @@ Deployment seams (see README "Cluster deployment"):
 - ``SPARK_GRAFT_CHECKPOINT_ROOT``: durable, cluster-visible root for
   streaming checkpoints (paths.ram_scratch_dir falls through to it);
   unset = local tmpfs (single-node ephemeral demos only).
-- ``SPARK_GRAFT_CPUS``: local-mode core count (default 32).
+- ``SPARK_GRAFT_CPUS``: local-mode core count, also the local shuffle
+  width (default: the cores in this process's CPU affinity mask).
+
+A fixture scan is spread across the cores by ONE size-gated policy,
+``tables.spread``; no operator repartitions a fixture scan itself.
 """
 
 from __future__ import annotations
@@ -24,7 +28,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def local_cpus() -> str:
+    """Local-mode core count: ``SPARK_GRAFT_CPUS``, else every core this
+    process may run on (its affinity mask, not the host's core count)."""
+    return os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
+
 
 # Engine semantics + runtime re-planning: correct and desirable on ANY
 # deployment, from local[1] to a 1000-executor cluster.
@@ -74,7 +85,7 @@ def local_conf() -> dict[str, str]:
     return {
         # [scale] locally sized to cores; on a cluster ~2-3x total
         # executor cores, or left to AQE — set via spark-submit --conf
-        "spark.sql.shuffle.partitions": DEFAULT_SHUFFLE_PARTITIONS,
+        "spark.sql.shuffle.partitions": local_cpus(),
         "spark.driver.memory": "90g",
         "spark.ui.enabled": "false",
         # per-PID warehouse: managed tables (bucketed sinks etc.) from
@@ -105,8 +116,7 @@ def get_spark(app_name: str = "dataengineeringutils_spark") -> SparkSession:
     for k, v in session_conf(on_cluster).items():
         builder = builder.config(k, v)
     if not on_cluster:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        builder = builder.master(f"local[{cpus}]")
+        builder = builder.master(f"local[{local_cpus()}]")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

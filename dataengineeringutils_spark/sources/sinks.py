@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from dataengineeringutils_spark.exprs import money_sum, o_money_sum
 from dataengineeringutils_spark.paths import scratch_dir
 from dataengineeringutils_spark.registry import query
-from dataengineeringutils_spark.tables import table
+from dataengineeringutils_spark.tables import spread, table
 
 NATION_SCHEMA = "n_nationkey INT, n_name STRING, n_regionkey INT"
 
@@ -241,21 +241,16 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ORC encode/decode, including decimal sums over every row.
     """
     out = scratch_dir("sink_orc_lineitem")
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice"
-    )
     # size-gated spread before the write: the single-row-group fixture
     # file scans as ONE task, which serialized the whole ORC encode on
     # one core (and the read-back on one file). Identity past one scan
     # split, so at production scale the write keeps the scan's own
     # parallelism with no extra exchange (guide §2.4/§6.2); the spread
-    # key is dropped before the write, so the written columns — and the
-    # round-trip aggregate — are unchanged.
-    from dataengineeringutils_spark.tables import spread_small_scan
-
-    li = spread_small_scan(spark, sf_dir, "lineitem", li, "l_orderkey")
-    li = li.drop("l_orderkey")
+    # key is not selected, so the written columns — and the round-trip
+    # aggregate — are unchanged.
+    li = spread(spark, sf_dir, "lineitem", "l_orderkey").select(
+        "l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice"
+    )
     li.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.groupBy("l_returnflag", "l_linestatus").agg(

@@ -155,54 +155,38 @@ def _table_bytes(sf_dir: str, name: str) -> int:
     return _TABLE_BYTES_CACHE[key]
 
 
-def _parse_byte_size(s: str) -> int:
-    """Parse a Spark byte-size conf string ('128m', '134217728b')."""
-    s = s.strip().lower()
-    mult = 1
-    for suffix, m in (("b", 1), ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    try:
-        return int(float(s) * mult)
-    except ValueError:
-        return 128 << 20
-
-
-def spread_small_scan(
-    spark: SparkSession, sf_dir: str, name: str, df: DataFrame, *keys: str
+def spread(
+    spark: SparkSession, sf_dir: str, name: str, *keys: str
 ) -> DataFrame:
-    """Keyed spread of a fixture scan ONLY when the table is small
-    enough that Spark would plan it as a single scan task.
+    """Fixture table ``name``, spread across all cores ONLY while it is
+    small enough that Spark would plan its scan as a single task.
 
-    The sf0.1 fixture files are single-row-group parquet (lineitem:
-    10.8 MB, one row group), so the scan is ONE task and every per-row
-    expression — most painfully the exact DECIMAL products feeding
-    heavily-reducing aggregates — serializes on one core. A keyed
-    repartition parallelizes that math, but an UNCONDITIONAL one is a
-    scale regression: at 100 TB it is a full extra exchange of the
-    fact table before a partial aggregate that would otherwise move
-    ~|groups| x |tasks| rows (round-11 VERDICT item 1).
+    This is the one place that may repartition a fixture scan. The
+    fixture files are single-row-group parquet (sf0.1 lineitem: 10.8 MB,
+    one row group), so the scan is ONE task and every per-row
+    expression downstream (DECIMAL products, tokenizing, hashing,
+    distance math) serializes on one core. A repartition right after the
+    scan parallelizes that work, keyed by ``keys`` when the consumer
+    groups or joins on them (the hash partitioning then satisfies the
+    consumer, no second exchange), round-robin otherwise.
 
-    Gate: spread only while the table's on-disk bytes fit inside ONE
-    scan split (``spark.sql.files.maxPartitionBytes``; a single row
-    group cannot be split further anyway). Then the exchange moves at
-    most one task's worth of input — cheap, and strictly better than
-    serializing. Past one split the scan parallelizes by itself and
-    this helper is the identity, so the declared plan at scale has NO
-    exchange before the partial aggregate. Override for tests/plans
-    via ``SPARK_GRAFT_SPREAD_MAX_BYTES`` (``0`` disables the spread).
+    An UNCONDITIONAL spread is a scale regression: at 100 TB it is a
+    full extra exchange of the table, e.g. before a partial aggregate
+    that would otherwise move ~|groups| x |tasks| rows. So the spread
+    fires only while the table's on-disk bytes fit inside ONE scan split
+    (``spark.sql.files.maxPartitionBytes``; a single row group cannot be
+    split further anyway), where it moves at most one task's worth of
+    input. Past one split the scan parallelizes by itself and this is
+    ``table()``. The gate is evaluated on every call, so a conf change
+    takes effect on the next build.
+
+    Callers select and filter AFTER the spread: Catalyst pushes
+    projections and deterministic filters below the repartition, so the
+    scan keeps its pruning and pushdown.
     """
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_SPREAD_MAX_BYTES")
-    if env is not None:
-        limit = int(env)
-    else:
-        limit = _parse_byte_size(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-        )
-    if _table_bytes(sf_dir, name) > limit:
+    df = table(spark, sf_dir, name)
+    conf = spark._jsparkSession.sessionState().conf()
+    split = conf.filesMaxPartitionBytes()
+    if _table_bytes(sf_dir, name) > split:
         return df
     return df.repartition(spark.sparkContext.defaultParallelism, *keys)

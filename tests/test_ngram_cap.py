@@ -6,7 +6,8 @@ Pins the two halves of the ``MAX_SHINGLE_DF`` design:
 2. a genuinely hot (boilerplate) shingle IS detected and dropped, and the
    drop bounds pair fan-out;
 3. the capped plan applies the stop list as a broadcast anti-join (no
-   reshuffle of the shingle table).
+   reshuffle of the shingle table);
+4. the stop list's doc sample does not depend on the partition layout.
 """
 
 from __future__ import annotations
@@ -16,10 +17,13 @@ import io
 
 from pyspark.sql import functions as F
 
+from dataengineeringutils_spark import tables
 from dataengineeringutils_spark.operators.dedup import (
+    HOT_SAMPLE_FRACTION,
     _shingles_of,
     hot_shingle_stoplist,
     ngram_jaccard_pairs,
+    sample_docs,
     shingle_rows,
 )
 
@@ -77,3 +81,24 @@ def test_capped_plan_is_broadcast_anti_join(spark, sf_dir):
     plan = buf.getvalue()
     assert "LeftAnti" in plan
     assert "BroadcastHashJoin" in plan
+
+
+def test_stoplist_sample_is_layout_independent(spark, sf_dir, monkeypatch):
+    def sampled(docs):
+        return sorted(
+            r.doc_id
+            for r in sample_docs(docs, HOT_SAMPLE_FRACTION)
+            .select("doc_id")
+            .collect()
+        )
+
+    raw = tables.table(spark, sf_dir, "documents")
+    ids = sampled(raw)
+    n_docs = raw.count()
+    # a real 1/8 sample, not all or nothing
+    assert 0.05 * n_docs < len(ids) < 0.2 * n_docs, (len(ids), n_docs)
+    assert sampled(tables.spread(spark, sf_dir, "documents")) == ids
+    monkeypatch.setattr(tables, "_table_bytes", lambda sf_dir, name: 1 << 40)
+    assert sampled(tables.spread(spark, sf_dir, "documents")) == ids
+    assert sampled(raw.repartition(2)) == ids
+    assert sampled(raw.repartition(4)) == ids

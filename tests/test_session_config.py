@@ -5,9 +5,12 @@ would break (or silently mis-size) a spark-submit deployment."""
 
 from __future__ import annotations
 
+import os
+
 from dataengineeringutils_spark.session import (
     PORTABLE_CONF,
     local_conf,
+    local_cpus,
     session_conf,
 )
 
@@ -50,6 +53,18 @@ def test_local_conf_is_exactly_the_declared_local_set():
     )
 
 
+def test_local_cores_default_to_the_affinity_mask(monkeypatch):
+    """Local mode sizes itself to the cores this process may run on,
+    not to a hard-coded count; SPARK_GRAFT_CPUS still overrides."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    cores = str(len(os.sched_getaffinity(0)))
+    assert local_cpus() == cores
+    assert local_conf()["spark.sql.shuffle.partitions"] == cores
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == "3"
+    assert local_conf()["spark.sql.shuffle.partitions"] == "3"
+
+
 def test_checkpoint_root_seam_handles_remote_uri(monkeypatch):
     """SPARK_GRAFT_CHECKPOINT_ROOT=s3a://... must route streaming
     checkpoints through the Hadoop connector path untouched — no local
@@ -60,8 +75,6 @@ def test_checkpoint_root_seam_handles_remote_uri(monkeypatch):
     p = paths.ram_scratch_dir("ck_demo")
     assert p.startswith("s3a://bucket/ckpts/pid-")
     assert p.endswith("/ck_demo")
-    import os
-
     assert not os.path.exists("s3a:")  # no local dir side effect
 
 
