@@ -367,7 +367,8 @@ def stream_python_queue_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
+    from dataengineeringutils_spark.paths import scratch_dir
+    from dataengineeringutils_spark.streaming.runner import run_to_memory
 
     spark.dataSource.register(QueueDataSource)
     base = scratch_dir("file_queue_" + sf_dir.strip("/").replace("/", "_"))
@@ -383,28 +384,8 @@ def stream_python_queue_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.sum("event_id").cast("bigint").alias("sum_ids"),
     )
-    name = f"queue_sink_{next(_sink_counter)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            # ephemeral memory-sink demo: checkpoint on tmpfs (see paths)
-            .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return run_to_memory(agg, "complete", state_partitions=4)
 
-
-import itertools  # noqa: E402
-
-_sink_counter = itertools.count()
 
 # Reader/partition classes ship to executors; serialize this module by
 # value so workers need not import the package (see serde.py).

@@ -46,6 +46,14 @@ from pyspark.sql import functions as F
 
 from dataengineeringutils_spark.exprs import money_sum, o_money_sum
 from dataengineeringutils_spark.fuzzgen import compare_frames
+from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
+from dataengineeringutils_spark.streaming.runner import (
+    run_available_now,
+    run_to_memory,
+    stage,
+    stream_batches,
+    unique_name,
+)
 from dataengineeringutils_spark.streaming.windows import run_streaming
 from dataengineeringutils_spark.tables import table
 
@@ -403,9 +411,6 @@ def _mod_sql(case: dict) -> str:
 
 def _run_ssjoin(spark: SparkSession, con, sf_dir: str, case: dict) -> list:
     """Stream-stream inner interval join three ways; returns issues."""
-    from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
-    from dataengineeringutils_spark.streaming.windows import _sink_counter
-
     pdf = _stateful_src_pandas(spark, sf_dir, case)
     if not len(pdf):
         return []
@@ -428,30 +433,21 @@ def _run_ssjoin(spark: SparkSession, con, sf_dir: str, case: dict) -> list:
         chunks = out
     schema = "ts timestamp, event_type string, user_id long, value double, event_id long"
     cols = ["ts", "event_type", "user_id", "value", "event_id"]
-    base = scratch_dir(f"sfz_ssj_{case['seed']}")
-    n_l = n_r = 0
+    sides = {}
     for i, ch in enumerate(chunks):
-        lch = ch[ch["event_type"].isin(case["l_types"])]
-        rch = ch[ch["event_type"].isin(case["r_types"])]
-        if len(lch):
-            spark.createDataFrame(lch[cols], schema=schema).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{base}/l/b={i}")
-            n_l += 1
-        if len(rch):
-            spark.createDataFrame(rch[cols], schema=schema).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{base}/r/b={i}")
-            n_r += 1
-    if not n_l or not n_r:
+        for side in ("l", "r"):
+            part = ch[ch["event_type"].isin(case[f"{side}_types"])]
+            if len(part):
+                sides[f"{side}/batch={i}"] = spark.createDataFrame(
+                    part[cols], schema=schema
+                )
+    if {k[0] for k in sides} != {"l", "r"}:
         return []
+    base = stage(spark, f"sfz_ssj_{case['seed']}", sides)
     delay = f"{case['delay_min']} minutes"
     bound = case["bound_min"]
     left = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(f"{base}/l/b=*")
+        stream_batches(spark, f"{base}/l", schema)
         .withWatermark("ts", delay)
         .select(
             F.col("event_id").alias("k_lid"),
@@ -460,10 +456,7 @@ def _run_ssjoin(spark: SparkSession, con, sf_dir: str, case: dict) -> list:
         )
     )
     right = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(f"{base}/r/b=*")
+        stream_batches(spark, f"{base}/r", schema)
         .withWatermark("ts", delay)
         .select(
             F.col("event_id").alias("k_rid"),
@@ -479,36 +472,16 @@ def _run_ssjoin(spark: SparkSession, con, sf_dir: str, case: dict) -> list:
     joined = left.join(right, cond).select(
         "k_lid", "k_rid", F.col("user_id").alias("k_user")
     )
-    name = f"sfz_sink_{next(_sink_counter)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     # INNER join: rows emit in the data batch that matched them; the
     # trailing no-data batch only evicts state a terminating run never
     # reads again (same rationale as the registered stream_stream_join)
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    stream_pdf = spark.table(name).toPandas()
+    stream_pdf = run_to_memory(
+        joined, state_partitions=2, no_data_batches=False
+    ).toPandas()
 
     # batch plan: identical join over the union of the side batches
-    lb = spark.read.schema(schema).parquet(f"{base}/l/b=*")
-    rb = spark.read.schema(schema).parquet(f"{base}/r/b=*")
+    lb = spark.read.schema(schema).parquet(f"{base}/l/batch=*")
+    rb = spark.read.schema(schema).parquet(f"{base}/r/batch=*")
     batch_pdf = (
         lb.select(
             F.col("event_id").alias("k_lid"), F.col("ts").alias("l_ts"), "user_id"
@@ -590,8 +563,6 @@ def _run_dedup_wm(spark: SparkSession, con, sf_dir: str, case: dict) -> list:
                 F.col("event_id").alias("k_id"),
             )
         )
-
-    from dataengineeringutils_spark.streaming.windows import run_streaming
 
     stream_pdf = run_streaming(
         spark, batches, f"sfz_dwm_{case['seed']}", build, output_mode="append"
@@ -712,67 +683,51 @@ _FB_SCHEMA = (
 )
 
 
-def _fb_batches(spark: SparkSession, sf_dir: str, case: dict, base: str):
-    """Write the case's contiguous time slices as one parquet file per
-    batch under ``base``/src and return the batch DataFrames (empty
-    slices dropped so batch ids are dense)."""
+def _fb_batches(spark: SparkSession, sf_dir: str, case: dict, name: str):
+    """Stage the case's contiguous time slices as one parquet file per
+    batch in a fresh ``scratch_dir(name)``; return (that dir, the batch
+    DataFrames), empty slices dropped so batch ids are dense."""
     import shutil
 
     pdf = _stateful_src_pandas(spark, sf_dir, case)
     if not len(pdf):
-        return []
+        return "", []
     chunks = [c for c in _slices(pdf, case["n_batches"]) if len(c)]
     sdfs = [
         spark.createDataFrame(ch[_FB_COLS], schema=_FB_SCHEMA)
         for ch in chunks
     ]
-    shutil.rmtree(base, ignore_errors=True)
-    for i, b in enumerate(sdfs):
-        b.coalesce(1).write.mode("overwrite").parquet(f"{base}/src/batch={i}")
-    return sdfs
+    shutil.rmtree(scratch_dir(name), ignore_errors=True)
+    return stage(spark, name, sdfs), sdfs
 
 
 def _run_upsert(spark: SparkSession, con, sf_dir: str, case: dict) -> list:
     """foreachBatch MERGE-upsert three ways; returns issues."""
     from dataengineeringutils_spark.keyed import KeyedTable
-    from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
-    from dataengineeringutils_spark.streaming.windows import _sink_counter
 
-    base = scratch_dir(f"sfz_ups_{case['seed']}")
-    sdfs = _fb_batches(spark, sf_dir, case, base)
+    base, sdfs = _fb_batches(spark, sf_dir, case, f"sfz_ups_{case['seed']}")
     if not sdfs:
         return []
     kt = KeyedTable(
         spark, f"{base}/table", keys=["user_id"], order_by=["ts", "event_id"]
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = (
-            spark.readStream.schema(sdfs[0].schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{base}/src/batch=*")
-            .writeStream.foreachBatch(lambda b, _id: kt.upsert(b))
-            .option(
-                "checkpointLocation",
-                ram_scratch_dir(f"ck_sfzups_{next(_sink_counter)}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if case["replay"] is not None and case["replay"] < len(sdfs):
-            # crash-window re-delivery: must not change the final state
-            kt.upsert(sdfs[case["replay"]])
-        out_cols = [
-            F.col("user_id").alias("k_user"),
-            F.col("ts").alias("k_ts"),
-            F.col("event_id").alias("k_id"),
-            F.col("value").alias("k_value"),
-        ]
-        stream_pdf = kt.current().select(*out_cols).toPandas()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    run_available_now(
+        spark,
+        stream_batches(spark, base, sdfs[0].schema)
+        .writeStream.foreachBatch(lambda b, _id: kt.upsert(b))
+        .option("checkpointLocation", ram_scratch_dir(unique_name("ck_sfzups"))),
+        state_partitions=2,
+    )
+    if case["replay"] is not None and case["replay"] < len(sdfs):
+        # crash-window re-delivery: must not change the final state
+        kt.upsert(sdfs[case["replay"]])
+    out_cols = [
+        F.col("user_id").alias("k_user"),
+        F.col("ts").alias("k_ts"),
+        F.col("event_id").alias("k_id"),
+        F.col("value").alias("k_value"),
+    ]
+    stream_pdf = kt.current().select(*out_cols).toPandas()
     src = sdfs[0]
     for b in sdfs[1:]:
         src = src.unionByName(b)
@@ -809,12 +764,9 @@ def _run_upsert(spark: SparkSession, con, sf_dir: str, case: dict) -> list:
 
 def _run_txn_sink(spark: SparkSession, con, sf_dir: str, case: dict) -> list:
     """foreachBatch txn-idempotent log sink three ways; returns issues."""
-    from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
-    from dataengineeringutils_spark.streaming.windows import _sink_counter
     from dataengineeringutils_spark.txnlog import LogTable
 
-    base = scratch_dir(f"sfz_txn_{case['seed']}")
-    sdfs = _fb_batches(spark, sf_dir, case, base)
+    base, sdfs = _fb_batches(spark, sf_dir, case, f"sfz_txn_{case['seed']}")
     if not sdfs:
         return []
     t = LogTable(spark, f"{base}/table")
@@ -828,42 +780,31 @@ def _run_txn_sink(spark: SparkSession, con, sf_dir: str, case: dict) -> list:
         t.append(partial, txn=("fz", batch_id))
         seen.append((partial, batch_id))
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    run_available_now(
+        spark,
+        stream_batches(spark, base, _FB_SCHEMA)
+        .writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", ram_scratch_dir(unique_name("ck_sfztxn"))),
+        state_partitions=2,
+    )
     issues: list = []
-    try:
-        q = (
-            spark.readStream.schema(_FB_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{base}/src/batch=*")
-            .writeStream.foreachBatch(write_batch)
-            .option(
-                "checkpointLocation",
-                ram_scratch_dir(f"ck_sfztxn_{next(_sink_counter)}"),
-            )
-            .trigger(availableNow=True)
-            .start()
+    if case["ckpt_before_replay"]:
+        t.checkpoint()  # consolidation must keep the txn watermark
+    for i in case["replay_set"]:
+        if i < len(seen):
+            partial, bid = seen[i]
+            if t.append(partial, txn=("fz", bid)) != -1:
+                issues.append(f"replay of txn batch {bid} not refused")
+    stream_pdf = (
+        t.snapshot()
+        .groupBy("event_type")
+        .agg(
+            F.sum("pn").cast("bigint").alias("k_n"),
+            F.sum("pv").cast("double").alias("k_sum"),
         )
-        q.awaitTermination()
-        if case["ckpt_before_replay"]:
-            t.checkpoint()  # consolidation must keep the txn watermark
-        for i in case["replay_set"]:
-            if i < len(seen):
-                partial, bid = seen[i]
-                if t.append(partial, txn=("fz", bid)) != -1:
-                    issues.append(f"replay of txn batch {bid} not refused")
-        stream_pdf = (
-            t.snapshot()
-            .groupBy("event_type")
-            .agg(
-                F.sum("pn").cast("bigint").alias("k_n"),
-                F.sum("pv").cast("double").alias("k_sum"),
-            )
-            .select(F.col("event_type").alias("k_type"), "k_n", "k_sum")
-            .toPandas()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        .select(F.col("event_type").alias("k_type"), "k_n", "k_sum")
+        .toPandas()
+    )
     src = sdfs[0]
     for b in sdfs[1:]:
         src = src.unionByName(b)
@@ -999,9 +940,6 @@ def _run_recovery(spark: SparkSession, con, sf_dir: str, case: dict) -> tuple[st
     import os
     import shutil
 
-    from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
-    from dataengineeringutils_spark.streaming.windows import _sink_counter
-
     pdf = _src_pandas(spark, sf_dir, case)
     if not len(pdf):
         return "(empty source)", []
@@ -1011,68 +949,48 @@ def _run_recovery(spark: SparkSession, con, sf_dir: str, case: dict) -> tuple[st
     # displacement merging can shrink the slice list; clamp the cut so
     # phase 1 always runs and phase 2 exists whenever >1 file does
     kill = min(case["kill_after"], max(1, len(batches) - 1))
-    n = next(_sink_counter)
-    src = scratch_dir(f"sfz_rec_src_{case['seed']}_{n}")
-    out = scratch_dir(f"sfz_rec_out_{case['seed']}_{n}")
-    ck = ram_scratch_dir(f"sfz_rec_ck_{case['seed']}_{n}")
+    tag = unique_name(f"sfz_rec_{case['seed']}")
+    out = scratch_dir(f"{tag}_out")
+    ck = ram_scratch_dir(f"{tag}_ck")
     build = _stream_build(case)
-    schema = batches[0].schema
 
-    def run_phase() -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(f"{src}/batch=*")
+    def run_phase(first: int, last: int) -> str:
+        src = stage(
+            spark,
+            f"{tag}_src",
+            {f"batch={i}": batches[i] for i in range(first, last)},
         )
-        q = (
-            build(stream)
+        run_available_now(
+            spark,
+            build(stream_batches(spark, src, batches[0].schema))
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ck),
+            state_partitions=2,
+            # append-mode windowed aggs emit on watermark advance: the
+            # trailing no-data batch is load-bearing in BOTH phases
+            no_data_batches=True,
         )
-        q.awaitTermination()
+        return src
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    # append-mode windowed aggs emit on watermark advance: the trailing
-    # no-data batch is load-bearing in BOTH phases
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    run_phase(0, kill)
+    if case["unclean"]:
+        cdir = os.path.join(ck, "commits")
+        ids = sorted((f for f in os.listdir(cdir) if f.isdigit()), key=int)
+        if ids:  # crash between offset write and commit write:
+            os.remove(os.path.join(cdir, ids[-1]))
+            # the local-FS ChecksumFs keeps a .N.crc sibling; a real
+            # crash loses both, and a stale one collides with the
+            # replayed commit's rename
+            crc = os.path.join(cdir, f".{ids[-1]}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+    src = run_phase(kill, len(batches))
     try:
-        for i, b in enumerate(batches[:kill]):
-            b.coalesce(1).write.mode("overwrite").parquet(f"{src}/batch={i}")
-        run_phase()
-        if case["unclean"]:
-            cdir = os.path.join(ck, "commits")
-            ids = sorted(
-                (f for f in os.listdir(cdir) if f.isdigit()), key=int
-            )
-            if ids:  # crash between offset write and commit write:
-                os.remove(os.path.join(cdir, ids[-1]))
-                # the local-FS ChecksumFs keeps a .N.crc sibling; a real
-                # crash loses both, and a stale one collides with the
-                # replayed commit's rename
-                crc = os.path.join(cdir, f".{ids[-1]}.crc")
-                if os.path.exists(crc):
-                    os.remove(crc)
-        for i, b in enumerate(batches[kill:], start=kill):
-            b.coalesce(1).write.mode("overwrite").parquet(f"{src}/batch={i}")
-        run_phase()
-        try:
-            stream_pdf = spark.read.parquet(out).toPandas()
-        except Exception:  # noqa: BLE001 — zero rows ever emitted
-            stream_pdf = None
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
+        stream_pdf = spark.read.parquet(out).toPandas()
+    except Exception:  # noqa: BLE001 — zero rows ever emitted
+        stream_pdf = None
     srcdf = batches[0]
     for b in batches[1:]:
         srcdf = srcdf.unionByName(b)

@@ -1,0 +1,156 @@
+"""The one way this package runs a terminating streaming query.
+
+``run_available_now`` owns how a query is sized, started and finished.
+It applies the query-scoped settings, calls ``start()`` with
+``trigger(availableNow=True)``, restores the session conf in a
+``finally`` before ``start()`` returns, then awaits termination.
+``start()`` clones the session, so the query (and the conf recorded in
+its checkpointed offset metadata) keeps the values it was started with,
+while every other reader of the shared session sees its own values for
+the whole run.
+
+Sizing the settings to the query, not to the cluster:
+
+- ``state_partitions`` (``spark.sql.shuffle.partitions``): each shuffle
+  partition of a stateful query is a state store that pays a fixed
+  setup+commit cost per micro-batch. Small key volumes run fastest on
+  few stores (4 -> 2 measured ~0.15 s less per run; the outer join's
+  per-side store quartet 2 -> 1 ~0.4 s less), while ~100k open-session
+  keys measured the opposite (2 -> 8 ~0.25 s less; 16 was slower
+  again). The value is baked into a query's checkpoint; at production
+  scale this is the knob you RAISE.
+- ``no_data_batches=False`` skips the trailing empty micro-batch for
+  queries whose output is complete without it (per-arrival emission:
+  inner joins, dedup, update-mode kernels, complete-mode aggregates):
+  one fewer trigger of store setup+commit. Queries that emit ON
+  watermark advance (append-mode windowed aggregates, outer-join NULL
+  rows) must keep it.
+- ``watermark_policy``: how a query with several watermarked inputs
+  folds them into the global watermark (Spark's default ``min`` or
+  ``max``).
+
+``None`` leaves a setting at the session's value. ``stage`` writes the
+deterministic batch files these queries read, and ``unique_name`` owns
+the sink and checkpoint name counter.
+"""
+
+from __future__ import annotations
+
+import itertools
+import re
+import threading
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
+
+_STATE_PARTITIONS = "spark.sql.shuffle.partitions"
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+_WATERMARK_POLICY = "spark.sql.streaming.multipleWatermarkPolicy"
+
+_names = itertools.count()
+_STAGED: set[str] = set()
+# save/set/start/restore is check-then-act on the shared session conf
+_CONF_LOCK = threading.Lock()
+
+
+def unique_name(prefix: str) -> str:
+    """Process-unique sink/checkpoint name: a memory sink's table name,
+    or a checkpoint dir that must not mark fresh files as processed."""
+    return f"{prefix}_{next(_names)}"
+
+
+def run_available_now(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    *,
+    state_partitions: int | None = None,
+    no_data_batches: bool | None = None,
+    watermark_policy: str | None = None,
+) -> StreamingQuery:
+    """Start ``writer`` as an availableNow query with the given settings,
+    leave the session conf as it was, and return the finished query."""
+    wanted = {}
+    if state_partitions is not None:
+        wanted[_STATE_PARTITIONS] = str(state_partitions)
+    if no_data_batches is not None:
+        wanted[_NO_DATA_BATCHES] = "true" if no_data_batches else "false"
+    if watermark_policy is not None:
+        wanted[_WATERMARK_POLICY] = watermark_policy
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k) for k in wanted}
+        try:
+            for k, v in wanted.items():
+                spark.conf.set(k, v)
+            q = writer.trigger(availableNow=True).start()
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+    q.awaitTermination()
+    return q
+
+
+def run_to_memory(
+    df: DataFrame, output_mode: str = "append", **settings
+) -> DataFrame:
+    """Run the streaming frame ``df`` into a fresh memory sink (settings
+    as ``run_available_now``) and return the sink's table."""
+    name = unique_name("stream_sink")
+    writer = (
+        df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        # a memory sink is ephemeral by definition, so its checkpoint
+        # rides tmpfs (WAL/offset fsyncs are the fixed per-batch cost);
+        # durable pipelines point this at durable storage
+        .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
+    )
+    run_available_now(df.sparkSession, writer, **settings)
+    return df.sparkSession.table(name)
+
+
+def stage(
+    spark: SparkSession,
+    name: str,
+    frames: list[DataFrame] | dict[str, DataFrame],
+    key: str | None = None,
+) -> str:
+    """Write each frame as one parquet file under ``scratch_dir`` and
+    return that directory: a list as ``batch=0..n-1`` (what
+    ``stream_batches`` reads), a dict under its named subdirectories.
+
+    With ``key`` (a fixture dir) the directory is suffixed by it and the
+    files are written once per (application, directory), then reused:
+    they are deterministic functions of the fixture, so re-writing them
+    per call only re-measures the parquet writer, while the query itself
+    (source, state store, triggers, sink) re-executes fully every call.
+    File mtimes are unchanged on reuse, so the oldest-first trigger
+    order is stable.
+    """
+    if key is not None:
+        name += "_" + re.sub(r"\W+", "_", key)
+    base = scratch_dir(name)
+    done = f"{spark.sparkContext.applicationId}:{base}"
+    if key is None or done not in _STAGED:
+        named = (
+            frames.items()
+            if isinstance(frames, dict)
+            else ((f"batch={i}", f) for i, f in enumerate(frames))
+        )
+        for sub, f in named:
+            f.coalesce(1).write.mode("overwrite").parquet(f"{base}/{sub}")
+        if key is not None:
+            _STAGED.add(done)
+    return base
+
+
+def stream_batches(spark: SparkSession, base: str, schema) -> DataFrame:
+    """Stream the staged ``base/batch=*`` files, one file per
+    micro-batch, oldest first: fixed batch contents in a fixed order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(f"{base}/batch=*")
+    )

@@ -4,7 +4,13 @@ B49-B51 are declared as batch queries (hash-checkable against the DuckDB
 oracle); the *same* logical plans run under Structured Streaming by
 swapping the source — ``run_streaming`` below does exactly that, and the
 unit tests assert batch/stream equivalence. B52-B53 execute genuinely
-stateful streams over a deterministic two-micro-batch file source.
+stateful streams over deterministic staged micro-batch files.
+
+Every streaming query here starts through ``runner.run_available_now``,
+the one place that sets a query's state partitions, no-data batches and
+multiple-watermark policy (and leaves the session conf alone), and reads
+files written by ``runner.stage``. Each op passes the values measured
+for its key volume; the sizing reasons live in the runner.
 
 Scale: windowed aggregations shuffle on (window, key) with partial aggs;
 watermarks bound the state store, so 100 TB/day of events keeps only the
@@ -14,19 +20,22 @@ open windows / in-horizon dedup keys in state, not history.
 from __future__ import annotations
 
 import datetime
-import itertools
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineeringutils_spark.exprs import money_sum, o_money_sum
-from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
+from dataengineeringutils_spark.paths import ram_scratch_dir
 from dataengineeringutils_spark.registry import query
+from dataengineeringutils_spark.streaming.runner import (
+    run_available_now,
+    run_to_memory,
+    stage,
+    stream_batches,
+    unique_name,
+)
 from dataengineeringutils_spark.tables import table, ts_bounds
-
-_sink_counter = itertools.count()
 
 
 def _ts_midpoint(spark: SparkSession, sf_dir: str):
@@ -159,9 +168,6 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- genuinely-streaming execution harness --------------------------------
 
 
-_BATCH_FILE_CACHE: set[str] = set()
-
-
 def run_streaming(
     spark: SparkSession,
     batches: list[DataFrame],
@@ -170,78 +176,25 @@ def run_streaming(
     output_mode: str = "append",
     cache_key: str | None = None,
     no_data_batches: bool = True,
-    shuffle_partitions: int = 2,
+    state_partitions: int = 2,
 ) -> DataFrame:
     """Execute ``build_query`` as a real Structured Streaming job over the
-    given micro-batches (each written as one parquet file, streamed with
+    given micro-batches (each staged as one parquet file, streamed with
     maxFilesPerTrigger=1 + availableNow) into an in-memory sink.
     Deterministic: fixed batch contents, fixed batch order.
 
-    With ``cache_key`` the batch FILES are written once per (session,
-    key) and reused — they are deterministic functions of the fixture, so
-    re-materializing them per call only re-measures the parquet writer;
-    the streaming query itself (source, state store, triggers, sink)
-    re-executes fully every call. File mtimes are unchanged on reuse, so
-    the oldest-first trigger order is stable.
+    With ``cache_key`` the batch files are staged once per (session,
+    key) and reused (see ``runner.stage``). The settings go to
+    ``runner.run_available_now``; the default of 2 state partitions
+    suits the small key volumes most ops here carry.
     """
-    suffix = "" if cache_key is None else "_" + re.sub(r"\W+", "_", cache_key)
-    src = scratch_dir(scratch_name + suffix)
-    schema = batches[0].schema
-    full_key = f"{spark.sparkContext.applicationId}:{cache_key}:{scratch_name}"
-    if cache_key is None or full_key not in _BATCH_FILE_CACHE:
-        for i, b in enumerate(batches):
-            b.coalesce(1).write.mode("overwrite").parquet(f"{src}/batch={i}")
-        if cache_key is not None:
-            _BATCH_FILE_CACHE.add(full_key)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(f"{src}/batch=*")
+    base = stage(spark, scratch_name, batches, key=cache_key)
+    return run_to_memory(
+        build_query(stream_batches(spark, base, batches[0].schema)),
+        output_mode,
+        state_partitions=state_partitions,
+        no_data_batches=no_data_batches,
     )
-    name = f"stream_sink_{next(_sink_counter)}"
-    # Size state-store count to the key volume, not cluster width: each
-    # shuffle partition is a state store paying fixed setup+commit cost
-    # per micro-batch (measured 4 -> 2 partitions: ~0.15 s less per run
-    # at the small key volumes most ops here carry; sessionization over
-    # ~100k session keys measured the OPPOSITE, 2 -> 8: ~0.25 s less —
-    # round-9 VERDICT #4). Callers size ``shuffle_partitions`` to their
-    # key volume. Fresh checkpoints each call, so the setting isn't
-    # sticky; at production scale this is the knob you RAISE.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # no_data_batches=False skips the trailing empty micro-batch for
-    # queries whose OUTPUT is complete without it (per-arrival emission:
-    # dedup/update-mode kernels/complete-mode aggs) — one fewer trigger
-    # of store setup+commit. Queries that emit ON watermark advance
-    # (append-mode windowed aggs, outer-join NULL eviction) must keep it.
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if no_data_batches else "false",
-    )
-    try:
-        q = (
-            build_query(stream)
-            .writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            # memory sink is ephemeral by definition, so its checkpoint
-            # rides tmpfs (WAL/offset fsyncs are the fixed per-batch
-            # cost); durable pipelines point this at durable storage
-            .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    return spark.table(name)
 
 
 @query(
@@ -502,33 +455,16 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("ts") > F.lit(cutoff)).select(*cols),
     ]
 
-    base = scratch_dir("stream_upsert_" + re.sub(r"\W+", "_", sf_dir))
-    batch_key = f"{spark.sparkContext.applicationId}:upsert:{sf_dir}"
-    if batch_key not in _BATCH_FILE_CACHE:
-        for i, b in enumerate(batches):
-            b.coalesce(1).write.mode("overwrite").parquet(f"{base}/batch={i}")
-        _BATCH_FILE_CACHE.add(batch_key)
-
+    base = stage(spark, "stream_upsert", batches, key=sf_dir)
     kt = KeyedTable(
         spark, f"{base}/table", keys=["user_id"], order_by=["ts", "event_id"]
     )
-
-    stream = (
-        spark.readStream.schema(batches[0].schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(f"{base}/batch=*")
+    run_available_now(
+        spark,
+        stream_batches(spark, base, batches[0].schema)
+        .writeStream.foreachBatch(lambda b, _id: kt.upsert(b))
+        .option("checkpointLocation", ram_scratch_dir(unique_name("ck_upsert"))),
     )
-    q = (
-        stream.writeStream.foreachBatch(lambda b, _id: kt.upsert(b))
-        .option(
-            "checkpointLocation",
-            ram_scratch_dir(f"ck_upsert_{next(_sink_counter)}"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return kt.current().select(
         "user_id",
         F.col("ts").alias("last_ts"),
@@ -576,16 +512,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     lo = ts_bounds(spark, sf_dir)[1] - datetime.timedelta(days=15)
     ev = ev.filter(F.col("ts") >= F.lit(lo))
-    base = scratch_dir("stream_ssj_" + re.sub(r"\W+", "_", sf_dir))
     cols = ["event_id", "ts", "user_id"]
     purchases = ev.filter(F.col("event_type") == "purchase").select(*cols)
     clicks = ev.filter(F.col("event_type") == "click").select(*cols)
-    batch_key = f"{spark.sparkContext.applicationId}:ssj:{sf_dir}"
-    if batch_key not in _BATCH_FILE_CACHE:
-        purchases.coalesce(1).write.mode("overwrite").parquet(f"{base}/p")
-        clicks.coalesce(1).write.mode("overwrite").parquet(f"{base}/c")
-        _BATCH_FILE_CACHE.add(batch_key)
-
+    base = stage(spark, "stream_ssj", {"p": purchases, "c": clicks}, key=sf_dir)
     p_stream = (
         spark.readStream.schema(purchases.schema)
         .parquet(f"{base}/p")
@@ -612,41 +542,16 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("c_ts") <= F.col("p_ts")),
     )
-    name = f"stream_sink_{next(_sink_counter)}"
-    # The join key-space here is tiny; state-store count == shuffle
-    # partitions and each store pays fixed setup/commit cost per batch,
-    # so run the stateful query on few partitions (sized to key volume,
-    # not cluster width — at scale you'd RAISE this, it's baked into the
-    # checkpoint). Restore the session conf afterwards.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
+    # The join key-space here is tiny: 4 state stores. INNER join: every
+    # output row emits in the data batch that matched it — the trailing
+    # no-data micro-batch only advances the watermark and evicts state,
+    # which a terminating run never reads again. (The OUTER variant
+    # keeps no-data batches: its NULL rows are emitted BY eviction.)
+    return run_to_memory(
+        joined.select("purchase_id", "click_id", "user_id"),
+        state_partitions=4,
+        no_data_batches=False,
     )
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    # INNER join: every output row emits in the data batch that matched
-    # it — the trailing no-data micro-batch exists only to advance the
-    # watermark and evict state, which a terminating availableNow run
-    # never reads again. Skipping it saves a full batch of store
-    # setup/commit. (The OUTER variant keeps no-data batches: its NULL
-    # rows are emitted BY eviction.)
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = (
-            joined.select("purchase_id", "click_id", "user_id")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-    return spark.table(name)
 
 
 # The stateful kernel ships to executors; serialize this module by value so
@@ -726,7 +631,7 @@ def stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_sess_append",
         build,
         cache_key=sf_dir,
-        shuffle_partitions=8,
+        state_partitions=8,
     )
 
 
@@ -776,6 +681,17 @@ def stream_outer_join_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     guaranteed complete and exactly equals the batch left join. The
     streaming machinery (two watermarked sources, interval state
     eviction, null synthesis) runs for the full data regardless.
+
+    The query runs under the ``max`` multiple-watermark policy. Under
+    Spark's default ``min`` the global watermark trails the LAGGING
+    side: on the sf0.001 fixture the last click is ~4 h before the last
+    event, so the final watermark (last click - 2 h) stays below the
+    settled cut and an unmatched purchase in the settled region never
+    emits its NULL row. Every row arrives in the first micro-batch, so
+    ``max`` drops nothing as late; it only lets the final no-data batch
+    evict up to the leading side. Precondition for the settled region:
+    the purchase or the click side has its max ts within about 1.5 h of
+    max(events.ts), which keeps the final watermark >= the cut + ~30 min.
     """
     ev = table(spark, sf_dir, "events")
     # Deterministic 8-day tail window: the op demonstrates outer-join
@@ -783,15 +699,10 @@ def stream_outer_join_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state store + sink cost proportionate at bench scale.
     lo = ts_bounds(spark, sf_dir)[1] - datetime.timedelta(days=8)
     ev = ev.filter(F.col("ts") >= F.lit(lo))
-    base = scratch_dir("stream_ssoj_" + re.sub(r"\W+", "_", sf_dir))
     cols = ["event_id", "ts", "user_id"]
     purchases = ev.filter(F.col("event_type") == "purchase").select(*cols)
     clicks = ev.filter(F.col("event_type") == "click").select(*cols)
-    batch_key = f"{spark.sparkContext.applicationId}:ssoj:{sf_dir}"
-    if batch_key not in _BATCH_FILE_CACHE:
-        purchases.coalesce(1).write.mode("overwrite").parquet(f"{base}/p")
-        clicks.coalesce(1).write.mode("overwrite").parquet(f"{base}/c")
-        _BATCH_FILE_CACHE.add(batch_key)
+    base = stage(spark, "stream_ssoj", {"p": purchases, "c": clicks}, key=sf_dir)
     p_stream = (
         spark.readStream.schema(purchases.schema)
         .parquet(f"{base}/p")
@@ -819,28 +730,16 @@ def stream_outer_join_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "left_outer",
     )
-    name = f"stream_sink_{next(_sink_counter)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # outer-join state = 4 store instances per partition per side; the
-    # key volume here fits ONE partition comfortably (see run_streaming's
-    # sizing note — at production scale this is the knob you RAISE);
-    # measured 2 -> 1 partitions: ~0.4 s less store setup/commit per run
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try:
-        q = (
-            joined.select("purchase_id", "p_ts", "click_id")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ram_scratch_dir(f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # key volume here fits ONE partition. ``max``: the global watermark
+    # follows the leading side (see the docstring's precondition).
+    out = run_to_memory(
+        joined.select("purchase_id", "p_ts", "click_id"),
+        state_partitions=1,
+        watermark_policy="max",
+    )
     cut = ts_bounds(spark, sf_dir)[1] - datetime.timedelta(hours=4)
-    out = spark.table(name).filter(F.col("p_ts") < F.lit(cut))
+    out = out.filter(F.col("p_ts") < F.lit(cut))
     return (
         out.groupBy(F.date_trunc("day", "p_ts").alias("d"))
         .agg(
@@ -882,27 +781,25 @@ def stream_incremental_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
     import shutil
 
     ev = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    base = scratch_dir("stream_incr_" + re.sub(r"\W+", "_", sf_dir))
-    stage = scratch_dir("stream_incr_stage_" + re.sub(r"\W+", "_", sf_dir))
-    fs_src = f"{base}/src"
-    ck = f"{base}/ck"
-    sink = f"{base}/sink"
     # fresh checkpoint/sink/src every call: this op's contract IS the
     # two-run resume. The batch FILES are deterministic fixture
     # functions, staged once per session and HARDLINKED into the fresh
     # src per call (the file source tracks seen paths, not mtimes, so a
     # linked batch=1 appearing after run 1 is "new" to the checkpoint).
+    staged = stage(
+        spark,
+        "stream_incr",
+        [ev.filter(F.col("event_id") % 2 == i) for i in range(2)],
+        key=sf_dir,
+    )
+    base = f"{staged}/run"
+    fs_src = f"{base}/src"
+    ck = f"{base}/ck"
+    sink = f"{base}/sink"
     shutil.rmtree(base, ignore_errors=True)
-    b0 = ev.filter(F.col("event_id") % 2 == 0)
-    b1 = ev.filter(F.col("event_id") % 2 == 1)
-    stage_key = f"{spark.sparkContext.applicationId}:incr:{sf_dir}"
-    if stage_key not in _BATCH_FILE_CACHE:
-        b0.coalesce(1).write.mode("overwrite").parquet(f"{stage}/batch=0")
-        b1.coalesce(1).write.mode("overwrite").parquet(f"{stage}/batch=1")
-        _BATCH_FILE_CACHE.add(stage_key)
 
     def link_batch(i: int) -> None:
-        src_d, dst_d = f"{stage}/batch={i}", f"{fs_src}/batch={i}"
+        src_d, dst_d = f"{staged}/batch={i}", f"{fs_src}/batch={i}"
         os.makedirs(dst_d, exist_ok=True)
         for f in os.listdir(src_d):
             os.link(os.path.join(src_d, f), os.path.join(dst_d, f))
@@ -925,13 +822,12 @@ def stream_incremental_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
                 .parquet(sink)
             )
 
-        q = (
-            stream.writeStream.foreachBatch(write_partials)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        q = run_available_now(
+            spark,
+            stream.writeStream.foreachBatch(write_partials).option(
+                "checkpointLocation", ck
+            ),
         )
-        q.awaitTermination()
         prog = q.lastProgress
         delta_rows.append(
             prog["numInputRows"] if prog else 0
@@ -941,7 +837,7 @@ def stream_incremental_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
     link_batch(1)  # "new files land" between the runs
     run_once()  # RESUMES from the checkpoint: sees only batch 1
     # parquet footer count of the staged batch — metadata-only job
-    n1 = spark.read.parquet(f"{stage}/batch=1").count()
+    n1 = spark.read.parquet(f"{staged}/batch=1").count()
     assert delta_rows[1] <= n1, (delta_rows, n1)
     back = spark.read.parquet(sink)
     return (
@@ -1072,18 +968,15 @@ def stream_txn_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    base = scratch_dir("stream_txn_" + re.sub(r"\W+", "_", sf_dir))
-    # source batch files are a deterministic fixture function — write
-    # once per (session, fixture) like run_streaming's cache; the TABLE
-    # directory is wiped every call (each run must build its own log)
-    src_key = f"{spark.sparkContext.applicationId}:txnsink:{sf_dir}"
+    # source batch files are staged once per (session, fixture); the
+    # TABLE directory is wiped every call (each run must build its own log)
+    base = stage(
+        spark,
+        "stream_txn",
+        [ev.filter(F.col("event_id") % 3 == i) for i in range(3)],
+        key=sf_dir,
+    )
     shutil.rmtree(f"{base}/table", ignore_errors=True)
-    if src_key not in _BATCH_FILE_CACHE:
-        for i in range(3):
-            ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{base}/src/batch={i}")
-        _BATCH_FILE_CACHE.add(src_key)
     t = LogTable(spark, f"{base}/table")
     replay: list = []
 
@@ -1095,21 +988,14 @@ def stream_txn_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.append(partial, txn=("etl", batch_id))
         replay.append((partial, batch_id))
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src/batch=*")
+    run_available_now(
+        spark,
+        stream_batches(spark, base, ev.schema)
         .writeStream.foreachBatch(write_batch)
         # counter-suffixed: a reused checkpoint would mark the (fresh)
         # batch files processed and deliver nothing on a second call
-        .option(
-            "checkpointLocation",
-            ram_scratch_dir(f"ck_txn_sink_{next(_sink_counter)}"),
-        )
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ram_scratch_dir(unique_name("ck_txn_sink"))),
     )
-    q.awaitTermination()
     # crash-window replay: the engine re-delivers the last batch
     last_df, last_id = replay[-1]
     assert t.append(last_df, txn=("etl", last_id)) == -1

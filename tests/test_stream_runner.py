@@ -1,0 +1,128 @@
+"""The streaming runner is the one place a streaming query is sized,
+started and finished (``streaming/runner.py``).
+
+Pinned here: the query runs with the settings it asked for while the
+shared session keeps reading its own values, a failed ``start()`` leaves
+the session as it was, and no other package code sets streaming query
+conf, keeps a batch-file cache or starts an availableNow trigger.
+"""
+
+from __future__ import annotations
+
+import pathlib
+import re
+
+import pytest
+
+from dataengineeringutils_spark.paths import ram_scratch_dir
+from dataengineeringutils_spark.streaming.runner import (
+    run_available_now,
+    stage,
+    stream_batches,
+    unique_name,
+)
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "dataengineeringutils_spark"
+KEYS = {
+    "state_partitions": "spark.sql.shuffle.partitions",
+    "no_data_batches": "spark.sql.streaming.noDataMicroBatches.enabled",
+    "watermark_policy": "spark.sql.streaming.multipleWatermarkPolicy",
+}
+
+
+def _stateful_writer(spark, seen: list, seen_by_query: list):
+    base = stage(
+        spark,
+        unique_name("runner_pin"),
+        [spark.range(20).selectExpr("id % 5 AS k", "timestamp_seconds(id) AS ts")],
+    )
+    agg = (
+        stream_batches(spark, base, "k long, ts timestamp")
+        .withWatermark("ts", "1 second")
+        .groupBy("k")
+        .count()
+    )
+
+    def sink(batch_df, _id):
+        # runs while the query runs: the shared session's view, and the
+        # view of the session the query cloned at start()
+        seen.append({k: spark.conf.get(v) for k, v in KEYS.items()})
+        seen_by_query.append(
+            {k: batch_df.sparkSession.conf.get(v) for k, v in KEYS.items()}
+        )
+        batch_df.collect()
+
+    return (
+        agg.writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .option("checkpointLocation", ram_scratch_dir(unique_name("ck_pin")))
+    )
+
+
+def test_query_gets_its_settings_and_session_keeps_its_own(spark):
+    before = {k: spark.conf.get(v) for k, v in KEYS.items()}
+    asked = 3 if before["state_partitions"] != "3" else 5
+    seen: list = []
+    seen_by_query: list = []
+    q = run_available_now(
+        spark,
+        _stateful_writer(spark, seen, seen_by_query),
+        state_partitions=asked,
+        no_data_batches=False,
+        watermark_policy="max",
+    )
+    assert seen and all(s == before for s in seen), (before, seen)
+    want = {
+        "state_partitions": str(asked),
+        "no_data_batches": "false",
+        "watermark_policy": "max",
+    }
+    assert all(s == want for s in seen_by_query), seen_by_query
+    assert {k: spark.conf.get(v) for k, v in KEYS.items()} == before
+    ops = q.lastProgress["stateOperators"]
+    assert ops and {o["numShufflePartitions"] for o in ops} == {asked}, ops
+    # no-data batches off: the one data batch is the whole run, although
+    # the watermark moved past every key's event time
+    assert len(q.recentProgress) == 1, len(q.recentProgress)
+
+
+def test_failed_start_leaves_session_conf_alone(spark):
+    before = {k: spark.conf.get(v) for k, v in KEYS.items()}
+    writer = (
+        spark.readStream.format("rate")
+        .load()
+        .writeStream.format("memory")
+        .queryName(unique_name("bad"))
+        # complete mode needs an aggregate: start() raises
+        .outputMode("complete")
+    )
+    with pytest.raises(Exception):
+        run_available_now(
+            spark, writer, state_partitions=7, no_data_batches=False,
+            watermark_policy="max",
+        )
+    assert {k: spark.conf.get(v) for k, v in KEYS.items()} == before
+
+
+def test_only_the_runner_sets_stream_conf_stages_or_triggers():
+    """Source pin over the whole package. ``tables._tune_for_scale`` sets
+    the session's shuffle width once per (application, fixture) at load:
+    session sizing for batch plans, not a streaming query setting."""
+    session_sizing = {("tables.py", "spark.sql.shuffle.partitions")}
+    conf_set = re.compile(
+        r"conf\.set\(\s*[\"'](spark\.sql\.shuffle\.partitions"
+        r"|spark\.sql\.streaming\.noDataMicroBatches\.enabled"
+        r"|spark\.sql\.streaming\.multipleWatermarkPolicy)"
+    )
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.relative_to(PKG).as_posix() == "streaming/runner.py":
+            continue
+        src = path.read_text()
+        for m in conf_set.finditer(src):
+            if (path.name, m.group(1)) not in session_sizing:
+                offenders.append(f"{path.name}: conf.set({m.group(1)})")
+        for pat in ("_BATCH_FILE_CACHE", "availableNow=True", "_sink_counter"):
+            if pat in src:
+                offenders.append(f"{path.name}: {pat}")
+    assert not offenders, offenders
