@@ -51,6 +51,11 @@ Memory honesty: DataFrame artifacts are served as plain
 ``spark.read.parquet`` scans — no ``localCheckpoint`` pinning executor
 storage for the app lifetime (round-7 ADVICE), no eviction problem, and
 the read-back plan carries parquet stats for downstream joins.
+
+What is built once per Spark APPLICATION goes through one memo,
+``per_session``; ``session_dir`` and ``session_table`` put their output
+where ``session_name`` derives from the same key, so a memo hit cannot
+serve another fixture's files.
 """
 
 from __future__ import annotations
@@ -58,11 +63,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from dataengineeringutils_spark.paths import scratch_dir
 
 # Every actual build (cache miss) appends {name, kind, build_sec, path}
 # here — tools/bench_artifacts.py turns this into ARTIFACT_BENCH.json so
@@ -123,7 +131,6 @@ def _code_stamp(build, name: str = "") -> str:
     raise rather than silently serve stale artifacts forever (round-9
     ADVICE: the quiet fallback defeated the invalidation guarantee)."""
     import inspect
-    import re
 
     fn = build
     for _ in range(32):  # bounded: pathological self-referential chains
@@ -171,13 +178,21 @@ def _rename_into_place(tmp: str, final: str) -> None:
             raise
 
 
-# In-process memos so repeat calls inside one session skip even the
-# (cheap) disk read. Keyed by the full slot path (fingerprint + code
-# stamp), so data regeneration AND code edits both invalidate in-process.
-# DataFrame memo additionally keys by applicationId — a plan object must
-# never outlive its SparkContext.
+def _logged(name: str, kind: str, path: str, build):
+    """Run ``build()`` and append its build record to the build log."""
+    t0 = time.perf_counter()
+    out = build()
+    _BUILD_LOG.append(
+        {"name": name, "kind": kind, "path": path,
+         "build_sec": round(time.perf_counter() - t0, 4)}
+    )
+    return out
+
+
+# In-process memo of JSON values so repeat calls skip even the (cheap)
+# disk read. Keyed by the full slot path (fingerprint + code stamp), so
+# data regeneration AND code edits both invalidate in-process.
 _JSON_MEMO: dict[str, object] = {}
-_DF_MEMO: dict[tuple, DataFrame] = {}
 
 
 def json_artifact(sf_dir: str, name: str, build):
@@ -185,24 +200,20 @@ def json_artifact(sf_dir: str, name: str, build):
     panels). Note JSON round-trip semantics: tuples come back as lists —
     callers must accept list shapes."""
     path = _slot(sf_dir, name, build) + ".json"
-    key = path
-    if key in _JSON_MEMO:
-        return _JSON_MEMO[key]
+    if path in _JSON_MEMO:
+        return _JSON_MEMO[path]
     if os.path.exists(path):
         with open(path) as fh:
             val = json.load(fh)
     else:
-        t0 = time.perf_counter()
-        val = json.loads(json.dumps(build()))  # normalize tuples->lists
-        _BUILD_LOG.append(
-            {"name": name, "kind": "json", "path": path,
-             "build_sec": round(time.perf_counter() - t0, 4)}
-        )
+        # normalize tuples->lists
+        val = _logged(name, "json", path,
+                      lambda: json.loads(json.dumps(build())))
         tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as fh:
             json.dump(val, fh)
         _rename_into_place(tmp, path)
-    _JSON_MEMO[key] = val
+    _JSON_MEMO[path] = val
     return val
 
 
@@ -213,22 +224,16 @@ def df_artifact(
     materializes ``build()`` to ``<slot>/<name>``; every caller (this
     session and every later one) gets the lazy read-back scan."""
     path = _slot(sf_dir, name, build)
-    key = (spark.sparkContext.applicationId, path)
-    cached = _DF_MEMO.get(key)
-    if cached is not None:
-        return cached
-    if not os.path.isdir(path):
-        t0 = time.perf_counter()
-        tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        build().write.mode("overwrite").parquet(tmp)
-        _BUILD_LOG.append(
-            {"name": name, "kind": "df", "path": path,
-             "build_sec": round(time.perf_counter() - t0, 4)}
-        )
-        _rename_into_place(tmp, path)
-    out = spark.read.parquet(path)
-    _DF_MEMO[key] = out
-    return out
+
+    def serve() -> DataFrame:
+        if not os.path.isdir(path):
+            tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+            _logged(name, "df", path,
+                    lambda: build().write.mode("overwrite").parquet(tmp))
+            _rename_into_place(tmp, path)
+        return spark.read.parquet(path)
+
+    return per_session(spark, ("artifacts.df", path), serve)
 
 
 def dir_artifact(sf_dir: str, name: str, build) -> str:
@@ -239,16 +244,72 @@ def dir_artifact(sf_dir: str, name: str, build) -> str:
     (the cache entry itself is immutable)."""
     path = _slot(sf_dir, name, build)
     if not os.path.isdir(path):
-        t0 = time.perf_counter()
         tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         os.makedirs(tmp)
-        build(tmp)
-        _BUILD_LOG.append(
-            {"name": name, "kind": "dir", "path": path,
-             "build_sec": round(time.perf_counter() - t0, 4)}
-        )
+        _logged(name, "dir", path, lambda: build(tmp))
         _rename_into_place(tmp, path)
     return path
+
+
+_SESSION_MEMO: dict[tuple, object] = {}
+
+
+def per_session(spark: SparkSession, key: tuple, build):
+    """``build()`` once per (Spark application, *key); later calls get
+    the first result, and nothing outlives its SparkContext. ``key``
+    starts with a tag naming what is built."""
+    k = (spark.sparkContext.applicationId, *key)
+    if k not in _SESSION_MEMO:
+        _SESSION_MEMO[k] = build()
+    return _SESSION_MEMO[k]
+
+
+def session_name(key: tuple) -> str:
+    """The scratch dir or managed-table name of a per-session artifact:
+    ``key``'s parts with non-word runs folded to ``_``, plus a hash of
+    ``key`` so keys that fold alike (``sf0.1``, ``sf0_1``) still differ.
+    Lower case, as the catalog stores table names."""
+    readable = "_".join(re.sub(r"\W+", "_", str(part)) for part in key)
+    digest = hashlib.sha1(repr(key).encode()).hexdigest()[:8]
+    return f"{readable}_{digest}".lower()
+
+
+def session_dir(spark: SparkSession, name: str, sf_dir: str, build) -> str:
+    """Scratch dir ``session_name((name, sf_dir))``, emptied and filled by
+    ``build(path)`` once per application; returns the path. For files
+    that are a deterministic function of the fixture."""
+    path = scratch_dir(session_name((name, sf_dir)))
+
+    def fill() -> str:
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        _logged(name, "session", path, lambda: build(path))
+        return path
+
+    return per_session(spark, (name, sf_dir), fill)
+
+
+def session_table(
+    spark: SparkSession, name: str, sf_dir: str, writer
+) -> DataFrame:
+    """Managed table ``session_name((name, sf_dir))``, saved by the
+    ``DataFrameWriter`` that ``writer()`` returns once per application.
+    The managed location outlives the per-session derby metastore, so
+    the entry is dropped AND any orphaned location cleared first, or
+    CREATE fails with LOCATION_ALREADY_EXISTS in a fresh session."""
+    tname = session_name((name, sf_dir))
+
+    def save() -> str:
+        where = f"{spark.conf.get('spark.sql.warehouse.dir')}/{tname}"
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")
+        p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(where)
+        p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(
+            p, True
+        )
+        _logged(name, "session", where, lambda: writer().saveAsTable(tname))
+        return tname
+
+    return spark.table(per_session(spark, (name, sf_dir), save))
 
 
 def cache_stats() -> dict:

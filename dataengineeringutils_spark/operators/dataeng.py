@@ -812,7 +812,6 @@ def dq_schema_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 COMPACT_TARGET_ROWS = 2000
-_COMPACT_TABLE_CACHE: dict = {}
 
 
 @query(
@@ -844,18 +843,19 @@ def keyed_table_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     `OPTIMIZE t`). The oracle recomputes latest-per-key from scratch
     and derives the same expected file count.
 
-    The upserted table is a SESSION-CACHED artifact (the keyed table a
+    The upserted table is a SESSION-BUILT artifact (the keyed table a
     scheduler maintains across runs — same discipline as the shingle /
-    edge / pair tables); the measured op is the compaction commit plus
-    the read through it. Compaction always recomputes: re-compacting an
-    already-compacted table is idempotent by construction.
+    edge / pair tables), reopened per call with ``KeyedTable.attach``;
+    the measured op is the compaction commit plus the read through it.
+    Compaction always recomputes: re-compacting an already-compacted
+    table is idempotent by construction.
     """
+    from dataengineeringutils_spark.artifacts import session_dir
     from dataengineeringutils_spark.keyed import KeyedTable
-    from dataengineeringutils_spark.paths import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    kt = _COMPACT_TABLE_CACHE.get(key)
-    if kt is None:
+    keys, order_by = ["o_custkey"], ["o_orderdate", "o_orderkey"]
+
+    def build(path: str) -> None:
         o = table(spark, sf_dir, "orders").select(
             "o_custkey", "o_orderdate", "o_orderkey", "o_orderstatus"
         )
@@ -867,15 +867,12 @@ def keyed_table_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("int"),
             ).alias("c")
         ).collect()[0]["c"]
-        kt = KeyedTable(
-            spark,
-            scratch_dir("keyed_compact"),
-            keys=["o_custkey"],
-            order_by=["o_orderdate", "o_orderkey"],
-        )
+        kt = KeyedTable(spark, path, keys=keys, order_by=order_by)
         kt.upsert(o.filter(F.col("o_orderdate") <= F.lit(cut)))
         kt.upsert(o.filter(F.col("o_orderdate") > F.lit(cut)))
-        _COMPACT_TABLE_CACHE[key] = kt
+
+    path = session_dir(spark, "keyed_compact", sf_dir, build)
+    kt = KeyedTable.attach(spark, path, keys=keys, order_by=order_by)
     n_files = kt.compact(COMPACT_TARGET_ROWS)
     return kt.current().groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),

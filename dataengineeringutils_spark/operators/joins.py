@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 
 from dataengineeringutils_spark.exprs import money_sum, o_money_sum
 from dataengineeringutils_spark.registry import query
+from dataengineeringutils_spark.session import scoped_conf
 from dataengineeringutils_spark.tables import spread, table
 
 
@@ -619,10 +620,7 @@ def join_runtime_bloom_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
     }
-    prev = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, confs):
         joined = li.join(o, li.l_orderkey == o.o_orderkey)
         out = joined.groupBy("o_orderpriority").agg(
             F.count("*").alias("n_lines"),
@@ -632,9 +630,6 @@ def join_runtime_bloom_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         # runtime filter is injected at optimization time, which happens
         # lazily at action time — so pin it by triggering planning now
         out._jdf.queryExecution().executedPlan()
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
     return out
 
 

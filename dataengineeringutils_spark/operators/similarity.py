@@ -1793,36 +1793,27 @@ def embeddings_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_CELL_BUCKETS = 8
-_ANN_LAYOUT_CACHE: dict = {}
 
 
 def _ann_cells_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-persisted IVF SERVING LAYOUT: the assigned vectors written
-    as a table BUCKETED BY CELL ID (``write.bucketBy(8, "cid")``). The
+    as a table BUCKETED BY CELL ID (``write.bucketBy(8, "cid")``), once
+    per (session, fixture) by ``artifacts.session_table``. The
     pay-shuffle-once investment for an ANN serving path: every
     subsequent cell lookup is a bucket-pruned scan — Spark reads ONLY
     the bucket files containing the queried cell (SelectedBucketsCount
     in the plan), never the rest of the corpus."""
-    app = spark.sparkContext.applicationId
-    if _ANN_LAYOUT_CACHE.get(app) != sf_dir:
-        # the managed-table location outlives the per-session metastore:
-        # drop the entry AND clear any orphaned location (same recovery
-        # as sources/sinks.write_bucketed)
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        spark.sql("DROP TABLE IF EXISTS ann_cells")
-        p = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/ann_cells")
-        p.getFileSystem(hconf).delete(p, True)
-        (
-            ivf_assigned(spark, sf_dir)
-            .write.mode("overwrite")
-            .bucketBy(ANN_CELL_BUCKETS, "cid")
-            .sortBy("cid")
-            .saveAsTable("ann_cells")
-        )
-        _ANN_LAYOUT_CACHE[app] = sf_dir
-    return spark.table("ann_cells")
+    from dataengineeringutils_spark.artifacts import session_table
+
+    return session_table(
+        spark,
+        "ann_cells",
+        sf_dir,
+        lambda: ivf_assigned(spark, sf_dir)
+        .write.mode("overwrite")
+        .bucketBy(ANN_CELL_BUCKETS, "cid")
+        .sortBy("cid"),
+    )
 
 
 @query("sink_ann_cell_layout", oracle=_ivf_oracle("vec_id IN (1, 2, 3)"))

@@ -220,22 +220,6 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DIST_BUCKETS = 32  # min range buckets for the distributed rank; ~cluster width
 
-# Session memo for DETERMINISTIC fixture artifacts shared by the
-# two-phase rank/sum ops. Heavy artifacts (cut lists, collapsed frames)
-# live on DISK via dataengineeringutils_spark.artifacts so fresh
-# sessions — the driver's bench included — hit warm numbers (round-7
-# VERDICT #1); this in-memory layer only holds per-session handles for
-# builders whose values aren't worth serializing.
-_FIXTURE_CACHE: dict[tuple, object] = {}
-
-
-def fixture_cached(spark, sf_dir: str, name: str, build):
-    """Compute ``build()`` once per (session, fixture, name)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key not in _FIXTURE_CACHE:
-        _FIXTURE_CACHE[key] = build()
-    return _FIXTURE_CACHE[key]
-
 
 def _dist_cuts(spark, sf_dir: str, o) -> list:
     """Price cut-points for the two-pass distributed rank, persisted per

@@ -24,7 +24,9 @@ A fixture scan is spread across the cores by ONE size-gated policy,
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -120,3 +122,22 @@ def get_spark(app_name: str = "dataengineeringutils_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# save/set/restore is check-then-act on the shared session conf
+_CONF_LOCK = threading.Lock()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, settings: dict[str, str]):
+    """Hold ``settings`` on the session conf for the ``with`` body, then
+    restore the values it had: the package's one save/set/restore."""
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k) for k in settings}
+        try:
+            for k, v in settings.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)

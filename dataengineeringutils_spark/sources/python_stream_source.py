@@ -335,9 +335,6 @@ def write_queue_fixture(
     shutil.rmtree(staging)
 
 
-_QUEUE_FIXTURE_CACHE: set[str] = set()
-
-
 @query(
     "stream_python_queue_source",
     oracle="""
@@ -367,15 +364,14 @@ def stream_python_queue_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from dataengineeringutils_spark.paths import scratch_dir
+    from dataengineeringutils_spark.artifacts import session_dir
     from dataengineeringutils_spark.streaming.runner import run_to_memory
 
     spark.dataSource.register(QueueDataSource)
-    base = scratch_dir("file_queue_" + sf_dir.strip("/").replace("/", "_"))
-    key = f"{spark.sparkContext.applicationId}:{base}"
-    if key not in _QUEUE_FIXTURE_CACHE:
-        write_queue_fixture(spark, sf_dir, base)
-        _QUEUE_FIXTURE_CACHE.add(key)
+    base = session_dir(
+        spark, "file_queue", sf_dir,
+        lambda path: write_queue_fixture(spark, sf_dir, path),
+    )
     stream = spark.readStream.format("file_queue").option("path", base).load()
     agg = stream.groupBy("event_type").agg(
         F.count("*").alias("n_events"),

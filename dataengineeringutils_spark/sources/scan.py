@@ -202,17 +202,11 @@ def scan_json_nested_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact is written once per (session, sf) like the other source
     fixtures.
     """
-    import os
-
     from pyspark.sql import functions as F
 
-    from dataengineeringutils_spark.paths import scratch_dir
+    from dataengineeringutils_spark.artifacts import session_dir
 
-    out = scratch_dir(
-        "scan_nested_" + os.path.basename(sf_dir.rstrip("/"))
-    )
-    key = f"{spark.sparkContext.applicationId}:nested:{sf_dir}"
-    if key not in _JSON_NESTED_CACHE:
+    def build(out: str) -> None:
         o = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 5000)
         nested = o.select(
             F.struct(
@@ -229,7 +223,8 @@ def scan_json_nested_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("order")
         )
         nested.coalesce(2).write.mode("overwrite").parquet(out)
-        _JSON_NESTED_CACHE.add(key)
+
+    out = session_dir(spark, "scan_nested", sf_dir, build)
     back = spark.read.parquet(out)
     return (
         back.groupBy(F.col("order.header.priority").alias("priority"))
@@ -241,9 +236,6 @@ def scan_json_nested_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("priority")
     )
-
-
-_JSON_NESTED_CACHE: set[str] = set()
 
 
 @query(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataengineeringutils_spark.artifacts import session_dir, session_table
 from dataengineeringutils_spark.exprs import money_sum, o_money_sum
 from dataengineeringutils_spark.paths import scratch_dir
 from dataengineeringutils_spark.registry import query
@@ -76,9 +77,6 @@ def sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_BUCKETS = 8
 
 
-_BUCKETED_CACHE: dict[str, str] = {}
-
-
 def write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Write lineitem + orders bucketed AND sorted by the join key, read
     back as catalog tables. Co-located, co-sorted layout: a join on the
@@ -86,38 +84,30 @@ def write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     the join plan contains no Exchange).
 
     The bucketed tables are the canonical pay-shuffle-ONCE artifact: they
-    are written once per (session, scale factor) and every later call —
-    like every later query in production — reads the existing layout.
+    are written once per (session, fixture) by ``artifacts.session_table``
+    and every later call — like every later query in production — reads
+    the existing layout.
     """
-    app = spark.sparkContext.applicationId
-    if _BUCKETED_CACHE.get(app) == sf_dir:
-        return spark.table("lineitem_bucketed"), spark.table("orders_bucketed")
-    # the managed-table location outlives the (per-session) derby
-    # metastore: drop the entry AND clear any orphaned location, or CREATE
-    # fails with LOCATION_ALREADY_EXISTS in a fresh session
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    for t in ("lineitem_bucketed", "orders_bucketed"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        p = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{t}")
-        p.getFileSystem(hconf).delete(p, True)
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    (
-        li.write.mode("overwrite")
-        .bucketBy(N_BUCKETS, "l_orderkey")
-        .sortBy("l_orderkey")
-        .saveAsTable("lineitem_bucketed")
+
+    def bucketed(name: str, key: str, other: str):
+        return (
+            table(spark, sf_dir, name)
+            .select(key, other)
+            .write.mode("overwrite")
+            .bucketBy(N_BUCKETS, key)
+            .sortBy(key)
+        )
+
+    return (
+        session_table(
+            spark, "lineitem_bucketed", sf_dir,
+            lambda: bucketed("lineitem", "l_orderkey", "l_quantity"),
+        ),
+        session_table(
+            spark, "orders_bucketed", sf_dir,
+            lambda: bucketed("orders", "o_orderkey", "o_orderstatus"),
+        ),
     )
-    (
-        o.write.mode("overwrite")
-        .bucketBy(N_BUCKETS, "o_orderkey")
-        .sortBy("o_orderkey")
-        .saveAsTable("orders_bucketed")
-    )
-    _BUCKETED_CACHE[app] = sf_dir
-    return spark.table("lineitem_bucketed"), spark.table("orders_bucketed")
 
 
 @query(
@@ -347,27 +337,20 @@ def sink_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DPP_CACHE: dict[str, str] = {}
-
-
 def write_month_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write lineitem hive-partitioned by ship month (once per session /
-    scale factor — the same pay-layout-once artifact discipline as the
+    fixture — the same pay-layout-once artifact discipline as the
     bucketed tables) and read it back as a partitioned source."""
-    import re as _re
 
-    app = spark.sparkContext.applicationId
-    dest = scratch_dir("dpp_lineitem_" + _re.sub(r"\W+", "_", sf_dir))
-    if _DPP_CACHE.get(app) != sf_dir:
-        li = table(spark, sf_dir, "lineitem").select(
+    def build(dest: str) -> None:
+        table(spark, sf_dir, "lineitem").select(
             "l_orderkey",
             "l_extendedprice",
             "l_discount",
             F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"),
-        )
-        li.write.mode("overwrite").partitionBy("ship_month").parquet(dest)
-        _DPP_CACHE[app] = sf_dir
-    return spark.read.parquet(dest)
+        ).write.mode("overwrite").partitionBy("ship_month").parquet(dest)
+
+    return spark.read.parquet(session_dir(spark, "dpp_lineitem", sf_dir, build))
 
 
 @query(

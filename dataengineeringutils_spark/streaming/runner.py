@@ -1,9 +1,9 @@
 """The one way this package runs a terminating streaming query.
 
 ``run_available_now`` owns how a query is sized, started and finished.
-It applies the query-scoped settings, calls ``start()`` with
-``trigger(availableNow=True)``, restores the session conf in a
-``finally`` before ``start()`` returns, then awaits termination.
+It holds the query-scoped settings (``session.scoped_conf``) around
+``start()`` with ``trigger(availableNow=True)``, so the session conf is
+restored as soon as ``start()`` returns, then awaits termination.
 ``start()`` clones the session, so the query (and the conf recorded in
 its checkpointed offset metadata) keeps the values it was started with,
 while every other reader of the shared session sees its own values for
@@ -37,22 +37,19 @@ the sink and checkpoint name counter.
 from __future__ import annotations
 
 import itertools
-import re
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from dataengineeringutils_spark.artifacts import session_dir
 from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
+from dataengineeringutils_spark.session import scoped_conf
 
 _STATE_PARTITIONS = "spark.sql.shuffle.partitions"
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 _WATERMARK_POLICY = "spark.sql.streaming.multipleWatermarkPolicy"
 
 _names = itertools.count()
-_STAGED: set[str] = set()
-# save/set/start/restore is check-then-act on the shared session conf
-_CONF_LOCK = threading.Lock()
 
 
 def unique_name(prefix: str) -> str:
@@ -78,15 +75,8 @@ def run_available_now(
         wanted[_NO_DATA_BATCHES] = "true" if no_data_batches else "false"
     if watermark_policy is not None:
         wanted[_WATERMARK_POLICY] = watermark_policy
-    with _CONF_LOCK:
-        prev = {k: spark.conf.get(k) for k in wanted}
-        try:
-            for k, v in wanted.items():
-                spark.conf.set(k, v)
-            q = writer.trigger(availableNow=True).start()
-        finally:
-            for k, v in prev.items():
-                spark.conf.set(k, v)
+    with scoped_conf(spark, wanted):
+        q = writer.trigger(availableNow=True).start()
     q.awaitTermination()
     return q
 
@@ -120,19 +110,16 @@ def stage(
     return that directory: a list as ``batch=0..n-1`` (what
     ``stream_batches`` reads), a dict under its named subdirectories.
 
-    With ``key`` (a fixture dir) the directory is suffixed by it and the
-    files are written once per (application, directory), then reused:
+    With ``key`` (a fixture dir) the files are written once per
+    (application, name, key) by ``artifacts.session_dir``, then reused:
     they are deterministic functions of the fixture, so re-writing them
     per call only re-measures the parquet writer, while the query itself
     (source, state store, triggers, sink) re-executes fully every call.
     File mtimes are unchanged on reuse, so the oldest-first trigger
     order is stable.
     """
-    if key is not None:
-        name += "_" + re.sub(r"\W+", "_", key)
-    base = scratch_dir(name)
-    done = f"{spark.sparkContext.applicationId}:{base}"
-    if key is None or done not in _STAGED:
+
+    def write(base: str) -> None:
         named = (
             frames.items()
             if isinstance(frames, dict)
@@ -140,8 +127,11 @@ def stage(
         )
         for sub, f in named:
             f.coalesce(1).write.mode("overwrite").parquet(f"{base}/{sub}")
-        if key is not None:
-            _STAGED.add(done)
+
+    if key is not None:
+        return session_dir(spark, name, key, write)
+    base = scratch_dir(name)
+    write(base)
     return base
 
 

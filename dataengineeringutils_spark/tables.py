@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataengineeringutils_spark.artifacts import per_session
+
 TABLES = (
     "region",
     "nation",
@@ -23,14 +25,10 @@ TABLES = (
     "embeddings",
 )
 
-# Plan-object cache: spark.read.parquet does driver-side file listing +
-# footer schema read EAGERLY per call; a 176-query correctness sweep
-# re-plans the same ten fixture scans hundreds of times. DataFrames are
-# immutable, so handing back the same object is safe and keeps the plan
-# (and its pushdown/pruning) identical. Keyed by applicationId so a
-# restarted SparkContext never receives a stale plan.
-_DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_TUNED: set[tuple[str, str]] = set()
+# Fixture plans are built once per (application, fixture) through
+# ``artifacts.per_session``: spark.read.parquet lists files and reads
+# footers EAGERLY per call, and DataFrames are immutable, so handing back
+# the same object is safe and keeps the plan identical.
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -51,10 +49,6 @@ def _tune_for_scale(spark: SparkSession, sf_dir: str) -> None:
     on a real cluster this knob belongs to the deployment, not the
     library.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TUNED:
-        return
-    _TUNED.add(key)
     # The engine's timestamp semantics are UTC (SURVEY §4): every
     # timestamp column is an instant, rendered/compared in UTC. A plain
     # consumer session in another zone would silently shift the
@@ -79,11 +73,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown fixture table: {name}")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _DF_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    _tune_for_scale(spark, sf_dir)
+    return per_session(spark, ("tables.table", sf_dir, name),
+                       lambda: _load(spark, sf_dir, name))
+
+
+def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    per_session(spark, ("tables.tune", sf_dir),
+                lambda: _tune_for_scale(spark, sf_dir))
     if name == "events":
         from pyspark.sql.types import LongType, TimestampType
 
@@ -91,18 +87,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         ts_type = raw.schema["ts"].dataType
         if isinstance(ts_type, LongType):
-            df = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif not isinstance(ts_type, TimestampType):
-            df = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        else:
-            df = raw
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _DF_CACHE[cache_key] = df
-    return df
-
-
-_TS_BOUNDS_CACHE: dict[tuple[str, str], tuple] = {}
+            return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        if not isinstance(ts_type, TimestampType):
+            return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+        return raw
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def ts_bounds(spark: SparkSession, sf_dir: str) -> tuple:
@@ -112,16 +101,14 @@ def ts_bounds(spark: SparkSession, sf_dir: str) -> tuple:
     (``max(ts) - INTERVAL ...``); the fixture is immutable for the life
     of a session, so the bounds are computed once and shared — the
     scan-statistics-reuse a warehouse gets from table stats. Cleared
-    automatically on session restart (applicationId key)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TS_BOUNDS_CACHE:
-        row = (
-            table(spark, sf_dir, "events")
-            .agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
-            .collect()[0]
-        )
-        _TS_BOUNDS_CACHE[key] = (row["lo"], row["hi"])
-    return _TS_BOUNDS_CACHE[key]
+    automatically on session restart (a new application)."""
+    return per_session(
+        spark,
+        ("tables.ts_bounds", sf_dir),
+        lambda: tuple(
+            table(spark, sf_dir, "events").agg(F.min("ts"), F.max("ts")).first()
+        ),
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -3,8 +3,10 @@ started and finished (``streaming/runner.py``).
 
 Pinned here: the query runs with the settings it asked for while the
 shared session keeps reading its own values, a failed ``start()`` leaves
-the session as it was, and no other package code sets streaming query
-conf, keeps a batch-file cache or starts an availableNow trigger.
+the session as it was, no package code sets session conf outside
+``session.scoped_conf`` (bar ``tables.py``'s session settings), and no
+other package code keeps a batch-file cache or starts an availableNow
+trigger.
 """
 
 from __future__ import annotations
@@ -105,23 +107,32 @@ def test_failed_start_leaves_session_conf_alone(spark):
 
 
 def test_only_the_runner_sets_stream_conf_stages_or_triggers():
-    """Source pin over the whole package. ``tables._tune_for_scale`` sets
-    the session's shuffle width once per (application, fixture) at load:
-    session sizing for batch plans, not a streaming query setting."""
-    session_sizing = {("tables.py", "spark.sql.shuffle.partitions")}
-    conf_set = re.compile(
-        r"conf\.set\(\s*[\"'](spark\.sql\.shuffle\.partitions"
-        r"|spark\.sql\.streaming\.noDataMicroBatches\.enabled"
-        r"|spark\.sql\.streaming\.multipleWatermarkPolicy)"
-    )
+    """Source pin over the whole package. Session conf is set only inside
+    ``session.scoped_conf`` (save/set/restore under one lock), which the
+    runner and ``join_runtime_bloom_filtered`` use. The one exemption is
+    ``tables.py``'s three session settings, made once per (application,
+    fixture) at the first fixture load: session sizing and read settings
+    for batch plans, not a scoped setting."""
+    session_settings = {
+        ("tables.py", '"spark.sql.session.timeZone"'),
+        ("tables.py", '"spark.sql.shuffle.partitions"'),
+        ("tables.py", '"spark.sql.legacy.parquet.nanosAsLong"'),
+    }
+    conf_set = re.compile(r"conf\.(?:set|unset)\(\s*([^,)]+)")
+    src = (PKG / "session.py").read_text()
+    start = src.index("def scoped_conf(")
+    end = src.find("\n\n\n", start)
+    scoped = src[start : end if end >= 0 else None]
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
+        src = path.read_text()
+        if path.name == "session.py":
+            src = src.replace(scoped, "")
+        for m in conf_set.finditer(src):
+            if (path.name, m.group(1).strip()) not in session_settings:
+                offenders.append(f"{path.name}: conf.set({m.group(1)})")
         if path.relative_to(PKG).as_posix() == "streaming/runner.py":
             continue
-        src = path.read_text()
-        for m in conf_set.finditer(src):
-            if (path.name, m.group(1)) not in session_sizing:
-                offenders.append(f"{path.name}: conf.set({m.group(1)})")
         for pat in ("_BATCH_FILE_CACHE", "availableNow=True", "_sink_counter"):
             if pat in src:
                 offenders.append(f"{path.name}: {pat}")

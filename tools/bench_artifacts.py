@@ -12,6 +12,8 @@ artifacts.build_log()), then time each artifact's SERVE path:
         get the lazy scan fused into their query plan
 - dir:  os.walk stat pass (dir artifacts are served as paths; consumers
         pay their own reads, which the df/json rows already represent)
+- session: the same stat pass over a per-session scratch dir or managed
+        table location (artifacts.session_dir / session_table)
 
 Writes ARTIFACT_BENCH.json: one row per artifact (name, kind, build_sec,
 serve_sec, bytes), plus totals. Run alone (one Spark process — the same
@@ -79,14 +81,15 @@ def main() -> int:
 
     rows = []
     for entry in artifacts.build_log():
-        path, kind = entry["path"], entry["kind"]
+        # a managed table's location is a file: URI
+        path, kind = entry["path"].removeprefix("file:"), entry["kind"]
         t1 = time.perf_counter()
         if kind == "json":
             with open(path) as fh:
                 json.load(fh)
         elif kind == "df":
             spark.read.parquet(path).count()
-        else:  # dir — served as a path; stat pass only
+        else:  # dir/session — served as a path; stat pass only
             _tree_bytes(path)
         serve = time.perf_counter() - t1
         rows.append(
