@@ -148,6 +148,16 @@ class KeyedTable:
         self._version += 1
         return files
 
+    def vacuum(self, keep: int) -> None:
+        """Delete the committed versions between the first ``keep`` and
+        the current one (the lakehouse VACUUM): history that grows by
+        one table copy per commit stays bounded. Time travel to a
+        deleted version fails afterwards."""
+        import shutil
+
+        for v in range(keep, self._version):
+            shutil.rmtree(f"{self.base_path}/state_v{v}", ignore_errors=True)
+
     def current(self) -> DataFrame:
         """The table's current (latest-committed) version."""
         if self._version < 0:

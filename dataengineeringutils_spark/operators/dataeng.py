@@ -848,7 +848,8 @@ def keyed_table_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge / pair tables), reopened per call with ``KeyedTable.attach``;
     the measured op is the compaction commit plus the read through it.
     Compaction always recomputes: re-compacting an already-compacted
-    table is idempotent by construction.
+    table is idempotent by construction, and each call vacuums the
+    compaction before it, so repeated calls keep three versions.
     """
     from dataengineeringutils_spark.artifacts import session_dir
     from dataengineeringutils_spark.keyed import KeyedTable
@@ -874,6 +875,9 @@ def keyed_table_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = session_dir(spark, "keyed_compact", sf_dir, build)
     kt = KeyedTable.attach(spark, path, keys=keys, order_by=order_by)
     n_files = kt.compact(COMPACT_TARGET_ROWS)
+    # retention: the two upserts and this compaction; an older compaction
+    # is a superseded copy of the same state
+    kt.vacuum(keep=2)
     return kt.current().groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
         F.lit(n_files).cast("bigint").alias("n_files"),

@@ -75,6 +75,17 @@ PORTABLE_CONF: dict[str, str] = {
     # point lookup on a bucket column would silently read all buckets
     # (sink_ann_cell_layout's serving path relies on the pruning)
     "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
+    # Generated-code cache sized to the operator catalogue (static conf:
+    # it must be here, before the session exists; every JVM keeps its own
+    # cache, so the value is portable). At Spark's default of 100 entries
+    # a session cycling through queries evicts its own code before reuse:
+    # the 17-op analytics_etl panel needs 166 distinct whole-stage classes
+    # and recompiled 120-150 of them with Janino every round, each a new JVM
+    # class the JIT compiles again. All 468 non-stream ops at sf0.01 need
+    # 4947 classes (mean 2.8 KB of bytecode); holding every one of them
+    # took 257 MB of Metaspace and 154 MB of the 240 MB reserved code
+    # heap. 8192 is that working set with ~1.6x headroom.
+    "spark.sql.codegen.cache.maxEntries": "8192",
 }
 
 

@@ -30,18 +30,21 @@ Sizing the settings to the query, not to the cluster:
   ``max``).
 
 ``None`` leaves a setting at the session's value. ``stage`` writes the
-deterministic batch files these queries read, and ``unique_name`` owns
-the sink and checkpoint name counter.
+deterministic batch files these queries read, ``call_dir`` holds one
+call's own outputs, and ``unique_name`` owns the sink and checkpoint
+name counter.
 """
 
 from __future__ import annotations
 
 import itertools
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from dataengineeringutils_spark.artifacts import session_dir
+from dataengineeringutils_spark.artifacts import session_dir, session_name
 from dataengineeringutils_spark.paths import ram_scratch_dir, scratch_dir
 from dataengineeringutils_spark.session import scoped_conf
 
@@ -133,6 +136,17 @@ def stage(
     base = scratch_dir(name)
     write(base)
     return base
+
+
+def call_dir(name: str, key: str) -> str:
+    """An empty scratch dir for one call's outputs (source links, sinks,
+    tables) of op ``name`` on fixture ``key``: a fixed path per fixture
+    beside the staged files, so on their filesystem (staged files can be
+    hardlinked in) but not inside them, wiped on every call."""
+    path = scratch_dir(session_name((name, key)))
+    shutil.rmtree(path)
+    os.makedirs(path)
+    return path
 
 
 def stream_batches(spark: SparkSession, base: str, schema) -> DataFrame:

@@ -29,6 +29,7 @@ from dataengineeringutils_spark.exprs import money_sum, o_money_sum
 from dataengineeringutils_spark.paths import ram_scratch_dir
 from dataengineeringutils_spark.registry import query
 from dataengineeringutils_spark.streaming.runner import (
+    call_dir,
     run_available_now,
     run_to_memory,
     stage,
@@ -778,7 +779,6 @@ def stream_incremental_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
     incremental-rollup op uses.
     """
     import os
-    import shutil
 
     ev = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     # fresh checkpoint/sink/src every call: this op's contract IS the
@@ -792,11 +792,10 @@ def stream_incremental_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
         [ev.filter(F.col("event_id") % 2 == i) for i in range(2)],
         key=sf_dir,
     )
-    base = f"{staged}/run"
+    base = call_dir("stream_incr_run", sf_dir)
     fs_src = f"{base}/src"
     ck = f"{base}/ck"
     sink = f"{base}/sink"
-    shutil.rmtree(base, ignore_errors=True)
 
     def link_batch(i: int) -> None:
         src_d, dst_d = f"{staged}/batch={i}", f"{fs_src}/batch={i}"
@@ -961,8 +960,6 @@ def stream_txn_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive consolidation) — and the oracle's exact per-type totals
     prove neither replay double-counted.
     """
-    import shutil
-
     from dataengineeringutils_spark.txnlog import LogTable
 
     ev = table(spark, sf_dir, "events").select(
@@ -976,8 +973,7 @@ def stream_txn_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         [ev.filter(F.col("event_id") % 3 == i) for i in range(3)],
         key=sf_dir,
     )
-    shutil.rmtree(f"{base}/table", ignore_errors=True)
-    t = LogTable(spark, f"{base}/table")
+    t = LogTable(spark, call_dir("stream_txn_table", sf_dir))
     replay: list = []
 
     def write_batch(batch_df, batch_id):

@@ -137,3 +137,26 @@ def test_keyed_table_attach_recovers_version_frontier(spark):
         spark, scratch_dir("test_kt_attach_empty"), keys=["k"], order_by=["v"]
     )
     assert kt3._version == -1
+
+
+def test_keyed_table_compact_keeps_a_bounded_history(spark, sf_dir):
+    """Each call commits a compaction; the op keeps the two upserts and
+    the latest compaction only, and every call still equals the oracle."""
+    import os
+
+    from dataengineeringutils_spark.artifacts import session_name
+    from dataengineeringutils_spark.registry import oracle_sql, queries
+    from tools.verify_local import canon_frame, duck_connect
+
+    name = "keyed_table_compact"
+    want = canon_frame(duck_connect(sf_dir).execute(oracle_sql()[name]).fetchdf())
+    for _ in range(3):
+        assert canon_frame(queries()[name](spark, sf_dir).toPandas()) == want
+    path = scratch_dir(session_name(("keyed_compact", sf_dir)))
+    # earlier calls in the same Spark session may have committed more compactions
+    versions = sorted(
+        int(e.removeprefix("state_v"))
+        for e in os.listdir(path)
+        if e.startswith("state_v")
+    )
+    assert len(versions) == 3 and versions[:2] == [0, 1], versions

@@ -137,3 +137,25 @@ def test_only_the_runner_sets_stream_conf_stages_or_triggers():
             if pat in src:
                 offenders.append(f"{path.name}: {pat}")
     assert not offenders, offenders
+
+
+@pytest.mark.parametrize(
+    "op, staged",
+    [
+        ("stream_incremental_checkpoint", "stream_incr"),
+        ("stream_txn_idempotent_sink", "stream_txn"),
+    ],
+)
+def test_per_call_outputs_stay_out_of_the_staged_batches(spark, sf_dir, op, staged):
+    """The staged dir holds the once-per-session batch files only; each
+    call's source links, sink and log table go to its own ``call_dir``."""
+    import os
+
+    from dataengineeringutils_spark.artifacts import session_name
+    from dataengineeringutils_spark.paths import scratch_dir
+    from dataengineeringutils_spark.registry import queries
+
+    for _ in range(2):
+        queries()[op](spark, sf_dir).collect()
+    entries = os.listdir(scratch_dir(session_name((staged, sf_dir))))
+    assert entries and all(e.startswith("batch=") for e in entries), entries
