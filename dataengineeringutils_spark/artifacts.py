@@ -34,7 +34,11 @@ file — the one defining the (fully unwrapped) builder callable. Two
 known holes remain, by design: (a) a builder whose logic lives in a
 helper imported from ANOTHER module is re-stamped only when its own
 defining file changes, so operator modules keep their builders (and
-the closures they capture) locally defined; (b) a sourceless callable
+the closures they capture) locally defined. Range cuts are the one
+shared input by design (``windows.sampled_cuts``, stamped by
+windows.py): an artifact that stores bucket ids or per-bucket
+statistics built from them puts ``windows.cuts_tag(cuts)`` in its
+name, so new cuts never pair with stale buckets; (b) a sourceless callable
 (C extension, REPL lambda) cannot be hashed at all — such builders now
 raise unless the caller opts in with an explicit version suffix in
 ``name`` (see ``_code_stamp``), so a silent pin to a stale stamp is

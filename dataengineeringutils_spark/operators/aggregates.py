@@ -507,9 +507,6 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MEDIAN_BUCKETS = 32
-
-
 @query(
     "agg_median_twophase",
     oracle="""
@@ -532,27 +529,17 @@ def agg_median_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape that survives 100 TB where ``median() OVER (PARTITION BY
     3-value-group)`` cannot.
     """
-    from dataengineeringutils_spark.artifacts import json_artifact
+    from dataengineeringutils_spark.operators.windows import (
+        bucket_expr,
+        sampled_cuts,
+    )
 
     o = table(spark, sf_dir, "orders").select("o_orderstatus", "o_totalprice")
-    qs = [i / MEDIAN_BUCKETS for i in range(1, MEDIAN_BUCKETS)]
-    # Cuts only balance bucket sizes — never the answer — so estimate them
-    # from a seeded 10% sample at loose precision, persisted per fixture
-    # like the other range-partition boundaries (windows._dist_cuts).
-    cuts = json_artifact(
-        sf_dir,
-        "median_price_cuts",
-        lambda: sorted(
-            set(
-                o.sample(0.1, seed=7).approxQuantile("o_totalprice", qs, 0.05)
-            )
-        ),
+    cuts = sampled_cuts(spark, sf_dir, "orders_price_cuts", o, "o_totalprice")
+    # median() ignores NULLs: drop them before n is counted
+    o = o.filter(F.col("o_totalprice").isNotNull()).withColumn(
+        "bkt", bucket_expr(F.col("o_totalprice"), cuts)
     )
-    price = F.col("o_totalprice")
-    bucket = F.lit(0)
-    for c in cuts:
-        bucket = bucket + (price > F.lit(c)).cast("int")
-    o = o.withColumn("bkt", bucket)
 
     counts = o.groupBy("o_orderstatus", "bkt").agg(F.count("*").alias("cnt"))
     w_cum = (
@@ -929,40 +916,35 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     totalweight`` stays in exact DECIMAL, and a conditional-MIN picks
     the crossing value — PERCENTILE_DISC generalized to weights.
     """
-    from dataengineeringutils_spark.artifacts import json_artifact
+    from dataengineeringutils_spark.artifacts import df_artifact, json_artifact
+    from dataengineeringutils_spark.operators.windows import (
+        bucket_expr,
+        bucket_range,
+        cuts_tag,
+        sampled_cuts,
+    )
 
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice", "l_orderkey", "l_linenumber",
         F.col("l_quantity").cast("decimal(18,2)").alias("wt"),
     )
-    qs = [i / MEDIAN_BUCKETS for i in range(1, MEDIAN_BUCKETS)]
-    cuts = json_artifact(
-        sf_dir,
-        "wmedian_price_cuts",
-        lambda: sorted(
-            set(
-                li.sample(0.1, seed=7).approxQuantile(
-                    "l_extendedprice", qs, 0.05
-                )
-            )
-        ),
+    cuts = sampled_cuts(
+        spark, sf_dir, "lineitem_extendedprice", li, "l_extendedprice"
     )
     price = F.col("l_extendedprice")
-    bucket = F.lit(0)
-    for c in cuts:
-        bucket = bucket + (price > F.lit(c)).cast("int")
-    li = li.withColumn("bkt", bucket)
+    li = li.withColumn("bkt", bucket_expr(price, cuts))
+    # the two artifacts below hold per-bucket statistics, so their names
+    # carry the digest of the cuts they were built from
+    tag = cuts_tag(cuts)
 
     # phase-1 (group x bucket) weight histogram: a deterministic
     # statistics artifact of the fixture (exactly what a 100 TB table
     # maintains alongside its range-partition cuts), persisted like the
     # cuts themselves — phase 2 below re-executes per call
-    from dataengineeringutils_spark.artifacts import df_artifact
-
     bw = df_artifact(
         spark,
         sf_dir,
-        "wmedian_bucket_weights",
+        f"wmedian_bucket_weights_{tag}",
         lambda: li.groupBy("l_returnflag", "bkt").agg(
             F.sum("wt").alias("bw")
         ),
@@ -1001,7 +983,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         ]
 
-    targets_rows = json_artifact(sf_dir, "wmedian_targets", _targets)
+    targets_rows = json_artifact(sf_dir, f"wmedian_targets_{tag}", _targets)
     targets = spark.createDataFrame(
         [(g, int(b), off, tw) for g, b, off, tw in targets_rows],
         "l_returnflag string, bkt int, off string, tw string",
@@ -1013,25 +995,16 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Push the target buckets' PRICE RANGES into the scan: the selection
     # phase only reads rows of the <=|groups| crossing buckets (~1/32 of
-    # the table each), and bucket b is by construction the open-closed
-    # price interval (cuts[b-1], cuts[b]] — a plain range predicate the
-    # parquet reader prunes row groups with. The bucket expression then
-    # runs on ~3/32 of the rows instead of all of them (measured: the
-    # full-scan plan needed ~4 JIT warmup runs to reach steady state,
-    # which interleaved bench rounds never gave it). The join on
-    # (group, bkt) below still drops other groups' rows that share a
-    # target price range.
+    # the table each), and ``bucket_range`` states each bucket as a
+    # plain range predicate the parquet reader prunes row groups with.
+    # The bucket expression then runs on ~3/32 of the rows instead of
+    # all of them (measured: the full-scan plan needed ~4 JIT warmup
+    # runs to reach steady state, which interleaved bench rounds never
+    # gave it). The join on (group, bkt) below still drops other
+    # groups' rows that share a target price range.
     rng = None
     for _g, b, _off, _tw in targets_rows:
-        b = int(b)
-        cond = None
-        if b >= 1:
-            cond = price > F.lit(cuts[b - 1])
-        if b < len(cuts):
-            hi = price <= F.lit(cuts[b])
-            cond = hi if cond is None else (cond & hi)
-        if cond is None:  # single-bucket degenerate case: no cuts
-            cond = F.lit(True)
+        cond = bucket_range(price, cuts, int(b))
         rng = cond if rng is None else (rng | cond)
     if rng is not None:
         li = li.filter(rng)

@@ -494,16 +494,17 @@ def orders_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     A, the next 15 % B, the tail C. The fact table collapses to one exact
     decimal revenue per part FIRST; the running and grand-total sums then
     run as a TWO-PHASE bucket-cut (``two_phase_global_rank`` with
-    ``sum_col`` — round-5 VERDICT #1): quantile cuts bucket the collapsed
-    frame, per-bucket decimal sums prefix-scan on the driver, and the
-    running sum is a per-bucket window + broadcast offset — no task ever
-    sorts all |parts|. Offsets accumulate in Python Decimal and class
+    ``sum_cols`` — round-5 VERDICT #1): quantile cuts bucket the collapsed
+    frame, per-bucket decimal sums prefix-scan in a |buckets|-row window,
+    and the running sum is a per-bucket window + broadcast offset — no
+    task ever sorts all |parts|. Offsets stay exact DECIMAL and class
     thresholds compare cum*100 ≤ total*80 in pure decimal
     (cross-multiplication instead of a ratio), so classification is
     exact and engine-independent.
     """
-    from dataengineeringutils_spark.artifacts import df_artifact, json_artifact
+    from dataengineeringutils_spark.artifacts import df_artifact
     from dataengineeringutils_spark.operators.windows import (
+        sampled_cuts,
         two_phase_global_rank,
     )
 
@@ -527,20 +528,7 @@ def orders_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    def _cuts():
-        # fixture-pure cut count (no defaultParallelism term — round-8
-        # ADVICE: the persisted artifact must not vary by machine)
-        n_cuts = 31
-        qs = [i / (n_cuts + 1) for i in range(1, n_cuts + 1)]
-        return sorted(
-            set(
-                part_rev.select(F.col("rev").cast("double").alias("rd"))
-                .sample(0.2, seed=7)
-                .stat.approxQuantile("rd", qs, 0.01)
-            )
-        )
-
-    cuts = json_artifact(sf_dir, "abc_part_rev_cuts", _cuts)
+    cuts = sampled_cuts(spark, sf_dir, "abc_part_rev", part_rev, "rev")
     ranked = two_phase_global_rank(
         part_rev,
         "rev",
@@ -549,9 +537,9 @@ def orders_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
         descending=True,
         rn_name="__rn_abc",
         n_name="__n_abc",
-        sum_col="rev",
-        sum_total_name="total_rev",
-        cum_sum_name="cum_rev",
+        sum_cols=["rev"],
+        total_names=["total_rev"],
+        cum_names=["cum_rev"],
     ).select("rev", "cum_rev", "total_rev")
     return (
         ranked.select(
@@ -832,15 +820,13 @@ def tpch_q8_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session cache for the per-customer spend frame + its bucket cuts —
-# shared by the Gini, Lorenz (and any future concentration) ops: the
-# collapse, checkpoint and quantile probe are deterministic fixture
-# artifacts; each op's ranking/arithmetic re-executes per call.
-
-
-
+# The per-customer spend frame + its bucket cuts — shared by the Gini,
+# Lorenz (and any future concentration) ops: the collapse and the cuts
+# are deterministic fixture artifacts; each op's ranking/arithmetic
+# re-executes per call.
 def _per_customer_spend(spark: SparkSession, sf_dir: str):
-    from dataengineeringutils_spark.artifacts import df_artifact, json_artifact
+    from dataengineeringutils_spark.artifacts import df_artifact
+    from dataengineeringutils_spark.operators.windows import sampled_cuts
 
     per_cust = df_artifact(
         spark,
@@ -854,21 +840,9 @@ def _per_customer_spend(spark: SparkSession, sf_dir: str):
             )
         ),
     )
-
-    def _cuts():
-        # fixture-pure cut count (no defaultParallelism term — round-8
-        # ADVICE: the persisted artifact must not vary by machine)
-        n_cuts = 31
-        qs = [i / (n_cuts + 1) for i in range(1, n_cuts + 1)]
-        return sorted(
-            set(
-                per_cust.select(
-                    F.col("spend").cast("double").alias("spend_d")
-                ).stat.approxQuantile("spend_d", qs, 0.01)
-            )
-        )
-
-    return per_cust, json_artifact(sf_dir, "per_customer_spend_cuts", _cuts)
+    return per_cust, sampled_cuts(
+        spark, sf_dir, "per_customer_spend", per_cust, "spend"
+    )
 
 
 @query(
@@ -1012,14 +986,19 @@ def orders_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowExec; each bucket is quantile-bounded.
     """
     from dataengineeringutils_spark.artifacts import df_artifact
-    from dataengineeringutils_spark.operators.windows import _dist_cuts
+    from dataengineeringutils_spark.operators.windows import (
+        bucket_expr,
+        sampled_cuts,
+    )
 
     def _build():
         # the filtered candidate frame is a deterministic fixture slice,
         # persisted on disk (parquet); the skyline passes below
         # re-execute per call
         o_all = table(spark, sf_dir, "orders")
-        cuts_ = _dist_cuts(spark, sf_dir, o_all)
+        cuts_ = sampled_cuts(
+            spark, sf_dir, "orders_price_cuts", o_all, "o_totalprice"
+        )
         o = o_all.filter(F.col("o_orderstatus") == "O")
         c = o.select(
             "o_orderkey",
@@ -1031,12 +1010,9 @@ def orders_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "d_us"
             ),
         )
-        bexpr = F.lit(0)
-        for cut in cuts_:
-            bexpr = bexpr + F.coalesce(
-                (F.col("o_totalprice") > F.lit(cut)).cast("int"), F.lit(0)
-            )
-        return c.withColumn("__bkt", bexpr)
+        return c.withColumn(
+            "__bkt", bucket_expr(F.col("o_totalprice"), cuts_)
+        )
 
     cand = df_artifact(spark, sf_dir, "skyline_candidates", _build)
     # cross-bucket carry-in: max date over all STRICTLY cheaper buckets
@@ -1855,12 +1831,13 @@ def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     timeline split is a scalar (min/max date arithmetic, shared text).
     Above the ``two_phase_min_rows`` switch each half's running/total
     revenue rides the ``orders_abc_class`` bucket-cut plan
-    (``two_phase_global_rank`` with ``sum_col``) — no task ever sorts
+    (``two_phase_global_rank`` with ``sum_cols``) — no task ever sorts
     all |parts|, which is a single-partition window at 100 TB (round-9
     VERDICT #2 global-window audit).
     """
-    from dataengineeringutils_spark.artifacts import df_artifact, json_artifact
+    from dataengineeringutils_spark.artifacts import df_artifact
     from dataengineeringutils_spark.operators.windows import (
+        sampled_cuts,
         table_rows,
         two_phase_global_rank,
         two_phase_min_rows,
@@ -1916,19 +1893,7 @@ def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("rev").over(w_all).alias("tot"),
             )
             return cumtot.select("l_partkey", F.expr(_CLS).alias("cls"))
-        cuts = json_artifact(
-            sf_dir,
-            f"abc_mig_cuts_{tag}",
-            lambda: sorted(
-                set(
-                    rev.select(F.col("rev").cast("double").alias("rd"))
-                    .sample(0.2, seed=7)
-                    .stat.approxQuantile(
-                        "rd", [i / 32 for i in range(1, 32)], 0.01
-                    )
-                )
-            ),
-        )
+        cuts = sampled_cuts(spark, sf_dir, f"abc_mig_rev_{tag}", rev, "rev")
         ranked = two_phase_global_rank(
             rev,
             "rev",
@@ -1937,9 +1902,9 @@ def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
             descending=True,
             rn_name="__rn_mig",
             n_name="__n_mig",
-            sum_col="rev",
-            sum_total_name="tot",
-            cum_sum_name="cum",
+            sum_cols=["rev"],
+            total_names=["tot"],
+            cum_names=["cum"],
         )
         return ranked.select("l_partkey", F.expr(_CLS).alias("cls"))
 

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from dataengineeringutils_spark.operators.windows import (
     ntile_closed_form,
+    sampled_cuts,
     two_phase_global_rank,
 )
 from dataengineeringutils_spark.registry import query
@@ -506,23 +507,19 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id long, recency_days long, frequency long, "
             "monetary double, r int, f int, m int",
         )
-    # one quantile pass for all three cut sets; cuts only balance the
-    # buckets, so loose precision on a collapsed frame is plenty
-    n_cuts = max(spark.sparkContext.defaultParallelism, 32) - 1
-    qs = [i / (n_cuts + 1) for i in range(1, n_cuts + 1)]
-    c_rec, c_frq, c_mon = per_user.stat.approxQuantile(
-        ["recency_days", "frequency", "monetary"], qs, 0.01
-    )
+    def cuts(col: str) -> list:
+        return sampled_cuts(spark, sf_dir, f"rfm_{col}", per_user, col)
+
     ranked = two_phase_global_rank(
-        per_user, "recency_days", "user_id", sorted(set(c_rec)),
+        per_user, "recency_days", "user_id", cuts("recency_days"),
         rn_name="rn_r", n_name="n",
     )
     ranked = two_phase_global_rank(
-        ranked, "frequency", "user_id", sorted(set(c_frq)),
+        ranked, "frequency", "user_id", cuts("frequency"),
         descending=True, rn_name="rn_f", n_name="n_f",
     )
     ranked = two_phase_global_rank(
-        ranked, "monetary", "user_id", sorted(set(c_mon)),
+        ranked, "monetary", "user_id", cuts("monetary"),
         descending=True, rn_name="rn_m", n_name="n_m",
     )
     return ranked.select(
@@ -2559,14 +2556,14 @@ def events_power_users_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per-user counts collapse the event table first (|users| rows); the
     global rank + the two global totals then run as ONE two-phase
-    bucket-cut pass (``two_phase_global_rank`` with ``sum_col`` —
+    bucket-cut pass (``two_phase_global_rank`` with ``sum_cols`` —
     round-5 VERDICT #1): the per-bucket aggregate carries both the row
-    count and SUM(n), the driver prefix scan broadcasts rank offsets
+    count and SUM(n), an in-plan prefix scan broadcasts rank offsets
     plus both grand totals, and row_number runs per bounded bucket — no
     single-partition window even if user counts approach fact scale.
     Exact integer masses, 6-dp share.
     """
-    from dataengineeringutils_spark.artifacts import df_artifact, json_artifact
+    from dataengineeringutils_spark.artifacts import df_artifact
 
     # per-user counts + their bucket cuts are deterministic fixture
     # artifacts, persisted on disk (parquet + JSON) so fresh sessions
@@ -2579,19 +2576,7 @@ def events_power_users_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count("*").cast("bigint").alias("n")),
     )
-    cuts = json_artifact(
-        sf_dir,
-        "pareto_per_user_cuts",
-        lambda: sorted(
-            set(
-                pu.select(F.col("n").cast("double").alias("nd"))
-                .sample(0.2, seed=7)
-                .stat.approxQuantile(
-                    "nd", [i / 32 for i in range(1, 32)], 0.01
-                )
-            )
-        ),
-    )
+    cuts = sampled_cuts(spark, sf_dir, "pareto_per_user", pu, "n")
     ranked = two_phase_global_rank(
         pu,
         "n",
@@ -2599,8 +2584,8 @@ def events_power_users_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         cuts,
         descending=True,
         n_name="n_users",
-        sum_col="n",
-        sum_total_name="total",
+        sum_cols=["n"],
+        total_names=["total"],
     ).select("n", "rn", "n_users", F.col("total").cast("bigint").alias("total"))
     marked = ranked.select(
         "n",
@@ -3300,23 +3285,7 @@ def events_repeat_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFram
         two_phase_global_rank,
     )
 
-    # bucket cuts are a deterministic statistic of the fixture's gap
-    # distribution — persist like every other cut artifact (round-11
-    # opt: the per-call approxQuantile re-ran the first-two join as an
-    # extra blocking job; cuts only balance buckets, never the answer)
-    from dataengineeringutils_spark.artifacts import json_artifact
-
-    cuts = json_artifact(
-        sf_dir,
-        "repeat_gap_cuts",
-        lambda: sorted(
-            set(
-                gap.stat.approxQuantile(
-                    "gap_hours", [0.25, 0.5, 0.75], 0.05
-                )
-            )
-        ),
-    )
+    cuts = sampled_cuts(spark, sf_dir, "repeat_gap_hours", gap, "gap_hours")
     ranked = two_phase_global_rank(
         gap, "gap_hours", "user_id", cuts, rn_name="rn"
     )
@@ -4301,16 +4270,10 @@ def events_quantile_treatment_effect(
             two_phase_global_rank,
         )
 
-        # materialize the |users|-row frame once: the cuts sample and
-        # both variant branches would otherwise recompute the events agg
+        # materialize the |users|-row frame once: both variant branches
+        # (and a cut build) would otherwise recompute the events agg
         per_user = per_user.localCheckpoint(eager=True)
-        cuts = sorted(
-            set(
-                per_user.sample(0.2, seed=7)
-                .select(F.col("y").cast("double").alias("yd"))
-                .approxQuantile("yd", [i / 16 for i in range(1, 16)], 0.02)
-            )
-        )
+        cuts = sampled_cuts(spark, sf_dir, "qte_user_revenue", per_user, "y")
         ranked = None
         for v in (0, 1):
             part = two_phase_global_rank(
@@ -4711,14 +4674,12 @@ def events_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a few thousand distinct doubles): below ``two_phase_min_rows``
     the direct global window wins; at scale — where distinct doubles
     approach row count and an unpartitioned window would sort them on
-    ONE task — both running counts ride the bucket-cut two-phase plan
-    (``bucketed_running_sums``: one |buckets|-row aggregate, driver
-    prefix scan, per-bucket windows) in a single shared pass. The
-    supremum is one map-combined MAX.
+    ONE task — both running counts and both totals ride one
+    bucket-cut two-phase pass (``two_phase_global_rank`` with
+    ``sum_cols``: one |buckets|-row aggregate, in-plan offsets,
+    per-bucket windows). The supremum is one map-combined MAX.
     """
     from dataengineeringutils_spark.operators.windows import (
-        bucketed_running_sums,
-        sampled_cuts,
         table_distinct,
         two_phase_min_rows,
     )
@@ -4745,19 +4706,21 @@ def events_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("c1").cast("bigint").alias("n1"),
             F.sum("c2").cast("bigint").alias("n2"),
         )
+        cum = cum.crossJoin(F.broadcast(tot))
     else:
-        # cut sample, bucket aggregate, totals and the final cumsum all
-        # consume the collapsed frame — materialize it once
+        # the bucket aggregate and the per-bucket windows both consume
+        # the collapsed frame — materialize it once
         vals = vals.localCheckpoint(eager=True)
         cuts = sampled_cuts(spark, sf_dir, "ks2s_v", vals, "v")
-        cum = bucketed_running_sums(
-            vals, "v", ["c1", "c2"], cuts, ["k1", "k2"]
-        ).select("k1", "k2")
-        tot = vals.agg(
-            F.sum("c1").cast("bigint").alias("n1"),
-            F.sum("c2").cast("bigint").alias("n2"),
+        cum = two_phase_global_rank(
+            vals,
+            "v",
+            "v",
+            cuts,
+            sum_cols=["c1", "c2"],
+            total_names=["n1", "n2"],
+            cum_names=["k1", "k2"],
         )
-    cum = cum.crossJoin(F.broadcast(tot))
     dmax = cum.groupBy("n1", "n2").agg(
         F.max(
             F.abs(

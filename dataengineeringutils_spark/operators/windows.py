@@ -12,7 +12,9 @@ Reference locus: Athena/Presto SQL passthrough,
 
 from __future__ import annotations
 
-import os
+import hashlib
+import json
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -218,56 +220,6 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DIST_BUCKETS = 32  # min range buckets for the distributed rank; ~cluster width
-
-
-def _dist_cuts(spark, sf_dir: str, o) -> list:
-    """Price cut-points for the two-pass distributed rank, persisted per
-    fixture like table statistics — they are range-partition boundaries,
-    a deterministic property of the data, and recomputing the
-    sample+quantile pass per call tripled the op's wall time at sf0.1
-    (round-2 VERDICT); recomputing it per SESSION put the build inside
-    the driver bench's timed window (round-7 VERDICT — hence the on-disk
-    artifact cache).
-
-    Bucket count scales with the data: max(DIST_BUCKETS, rows/1M) so
-    small inputs keep the cheap path (few cuts, few comparisons) and a
-    100 TB table gets enough buckets that no (status, bucket) partition
-    exceeds ~1M rows regardless of how few status values exist. The
-    count is a pure function of the FIXTURE (not of cluster width —
-    round-8 ADVICE: a defaultParallelism term made the persisted value
-    machine-dependent, so a cache populated on one box could disagree
-    with a rebuild on another); rows/1M already grows the bucket count
-    past any realistic cluster width exactly when width matters."""
-    from dataengineeringutils_spark.artifacts import json_artifact
-
-    def _build():
-        n = o.count()  # parquet metadata count — no column data read
-        buckets = max(DIST_BUCKETS, min(4096, -(-n // 1_000_000)))
-        qs = [i / buckets for i in range(1, buckets)]
-        # Cuts only balance bucket sizes — never the answer — so estimate
-        # them from a seeded 10% sample at loose precision: ~10x cheaper.
-        return sorted(
-            set(
-                o.sample(0.1, seed=7).approxQuantile(
-                    "o_totalprice", qs, 0.01
-                )
-            )
-        )
-
-    return json_artifact(sf_dir, "dist_cuts_totalprice", _build)
-
-
-def bucket_expr(value: Column, cuts: list) -> Column:
-    """Monotone bucket id from range-partition ``cuts``: chained codegen
-    comparisons; rows equal on ``value`` always share a bucket, so any
-    order whose FIRST key is ``value`` is preserved across buckets."""
-    b = F.lit(0)
-    for c in cuts:
-        b = b + (value > F.lit(c)).cast("int")
-    return b
-
-
 # Stats-driven plan switch for the keyed two-phase windows: below this
 # input-row count the direct keyed window wins (its single sort is
 # small and the two-phase machinery's extra aggregate + broadcast join
@@ -275,18 +227,12 @@ def bucket_expr(value: Column, cuts: list) -> Column:
 # bounded-bucket plan is mandatory (a 3-5-value partition key puts a
 # fixed fraction of the table on ONE sorting task). Same decision
 # discipline as Catalyst's size-based broadcast-vs-sort-merge choice.
-# Env override lets tests force either path on small fixtures; read at
-# CALL time (round-7 ADVICE: an import-time read silently ignored env
-# set by a test or driver after module import).
+# Read at call time, so a test can monkeypatch it to force either path.
 TWO_PHASE_MIN_ROWS = 500_000
 
 
 def two_phase_min_rows() -> int:
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_TWO_PHASE_MIN_ROWS", str(TWO_PHASE_MIN_ROWS)
-        )
-    )
+    return TWO_PHASE_MIN_ROWS
 
 
 def table_rows(spark, sf_dir: str, tbl: str) -> int:
@@ -327,6 +273,7 @@ def keyed_two_phase(
     *,
     weight: Column | None = None,
     n_rows: int | None = None,
+    total: str | None = None,
 ) -> DataFrame:
     """Exact per-``groups`` running window WITHOUT low-cardinality
     sorting tasks — the KEYED generalization of
@@ -343,24 +290,25 @@ def keyed_two_phase(
     per-(groups, bkt) window plus broadcast per-bucket offsets from a
     tiny (|groups| x |buckets|) aggregate. One extra map-combined
     aggregate replaces the unbounded per-group sort; every sorting
-    partition is bounded by the cut spacing at any scale.
+    partition is bounded by the cut spacing at any scale. ``total``
+    names an optional output holding the group's row count (or weight
+    sum), read off the same aggregate.
 
     ``n_rows`` (the caller's cheap metadata count of the input) drives
     the stats-based plan switch: below ``TWO_PHASE_MIN_ROWS`` the
     direct keyed window is used instead — identical numbers, no extra
     machinery (see the constant's comment).
     """
-    if n_rows is not None and n_rows < two_phase_min_rows():
-        if weight is None:
-            w = Window.partitionBy(*groups).orderBy(*order_cols)
-            return df.withColumn(out, F.row_number().over(w).cast("long"))
-        w = (
-            Window.partitionBy(*groups)
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        return df.withColumn(out, F.sum(weight).over(w))
     metric = F.count(F.lit(1)) if weight is None else F.sum(weight)
+    w_grp = Window.partitionBy(*groups)
+    if n_rows is not None and n_rows < two_phase_min_rows():
+        w = w_grp.orderBy(*order_cols)
+        if weight is None:
+            df = df.withColumn(out, F.row_number().over(w).cast("long"))
+        else:
+            w = w.rowsBetween(Window.unboundedPreceding, 0)
+            df = df.withColumn(out, F.sum(weight).over(w))
+        return df if total is None else df.withColumn(total, metric.over(w_grp))
     bw = df.groupBy(*groups, "bkt").agg(metric.alias("__bw"))
     w_cum = (
         Window.partitionBy(*groups)
@@ -371,6 +319,7 @@ def keyed_two_phase(
         *groups,
         "bkt",
         F.coalesce(F.sum("__bw").over(w_cum), F.lit(0)).alias("__off"),
+        *([F.sum("__bw").over(w_grp).alias(total)] if total else []),
     )
     joined = df.join(F.broadcast(offsets), [*groups, "bkt"])
     if weight is None:
@@ -386,23 +335,64 @@ def keyed_two_phase(
     return joined.withColumn(out, F.col("__off") + local).drop("__off")
 
 
+# The range-bucket policy of every two-phase operator, in one place.
+# Cuts only balance buckets, never answers, so they come from a seeded
+# sample; the relative error sits below the 1/32 bucket spacing. The
+# bucket count grows with the rows (max(32, rows/1M), at most 4096), so
+# no bucket of a 100 TB table holds more than ~1M rows however few
+# group values there are. It is a function of the data alone, never of
+# the cluster, so a persisted cut list is the same on every machine.
 def sampled_cuts(
-    spark, sf_dir: str, name: str, df: DataFrame, col: str, buckets: int = 32
+    spark, sf_dir: str, name: str, df: DataFrame, col: str
 ) -> list:
-    """Range-partition cuts for ``col`` (numeric), persisted per
-    (fixture, name) like the other deterministic fixture artifacts: a
-    seeded 10% sample through approxQuantile at loose precision — cuts
-    only balance buckets, never answers."""
+    """Range-partition cuts for numeric ``col`` of ``df``, persisted per
+    fixture as ``cuts_<name>``: ``name`` must identify the frame and
+    column, because the first build is served to every later caller.
+    The only place a two-phase operator's cuts are computed."""
     from dataengineeringutils_spark.artifacts import json_artifact
 
-    qs = [i / buckets for i in range(1, buckets)]
-    return json_artifact(
-        sf_dir,
-        f"cuts_{name}",
-        lambda: sorted(
-            set(df.sample(0.1, seed=7).approxQuantile(col, qs, 0.05))
-        ),
-    )
+    def build() -> list:
+        n = df.count()
+        buckets = max(32, min(4096, -(-n // 1_000_000)))
+        qs = [i / buckets for i in range(1, buckets)]
+        sample = df.sample(0.1, seed=7)
+        return sorted(set(sample.approxQuantile(col, qs, 0.01)))
+
+    return json_artifact(sf_dir, f"cuts_{name}", build)
+
+
+def bucket_expr(value: Column, cuts: list) -> Column:
+    """Bucket id of ``value``: the number of ``cuts`` below it, as
+    chained codegen comparisons. Ids are monotone in ``value`` and rows
+    equal on ``value`` share a bucket, so any order whose FIRST key is
+    ``value`` is preserved across buckets. NULL goes to bucket 0: under
+    ASC Spark orders NULLs first and bucket 0 is ranked first, under
+    DESC NULLs last and bucket 0 is ranked last, so a NULL row is
+    neither dropped by a join on the bucket id nor misplaced."""
+    b = F.lit(0)
+    for c in cuts:
+        b = b + (value > F.lit(c)).cast("int")
+    return F.coalesce(b, F.lit(0))
+
+
+def bucket_range(value: Column, cuts: list, b: int) -> Column:
+    """``bucket_expr(value, cuts) == b`` as a range predicate that the
+    parquet reader can prune row groups with: bucket ``b`` is the
+    interval (cuts[b-1], cuts[b]], and bucket 0 also holds NULL."""
+    lo = value > F.lit(cuts[b - 1]) if b >= 1 else None
+    hi = value <= F.lit(cuts[b]) if b < len(cuts) else None
+    if lo is None:
+        return F.lit(True) if hi is None else (hi | value.isNull())
+    return lo if hi is None else (lo & hi)
+
+
+def cuts_tag(cuts: list) -> str:
+    """Short digest of a cut list. An artifact that stores bucket ids or
+    per-bucket statistics carries it in its name: the artifact cache
+    stamps each entry with the module of its own builder, not with the
+    module that computed the cuts, so without the tag a cut-policy edit
+    would pair new cuts with stale buckets."""
+    return hashlib.sha1(json.dumps(cuts).encode()).hexdigest()[:8]
 
 
 def grouped_percentile_disc(
@@ -428,7 +418,11 @@ def grouped_percentile_disc(
     Replaces the ``row_number over low-cardinality group`` plan whose
     single sorting task holds a fixed fraction of the table at any
     scale (the class the stage-width skew gate cannot see).
+
+    NULL values are dropped before counting, as SQL's PERCENTILE_DISC
+    does: n counts only non-NULL values, on both paths.
     """
+    df = df.filter(F.col(value_col).isNotNull())
     vc = df.groupBy(*groups, value_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("__cnt")
     )
@@ -503,59 +497,44 @@ def two_phase_global_rank(
     descending: bool = False,
     rn_name: str = "rn",
     n_name: str = "n",
-    sum_col: str | None = None,
-    sum_total_name: str = "total",
-    cum_sum_name: str | None = None,
+    sum_cols: Sequence[str] = (),
+    total_names: Sequence[str] = (),
+    cum_names: Sequence[str] = (),
 ) -> DataFrame:
     """Exact global ROW_NUMBER under (``value_col`` dir, ``tie_col`` ASC)
-    WITHOUT a single-partition sort — the generalized form of
-    ``win_distribution``'s bucket-cut machinery, for unpartitioned ranks
-    over entity-collapsed frames (RFM ntiles, Gini — round-3 VERDICT
-    "What's wrong" #4).
+    WITHOUT a single-partition sort, for unpartitioned ranks over
+    entity-collapsed frames (RFM ntiles, Gini, Pareto shares).
 
-    (1) rows bucket via chained codegen comparisons against the quantile
-    ``cuts`` (cuts only balance buckets, never the answer — ties at a
-    cut land in one bucket consistently); (2) a |buckets|-row count
-    aggregate yields cumulative offsets in rank direction; (3)
-    row_number runs per BUCKET — bounded partitions — and the global
-    rank is local rank + broadcast offset. Appends ``rn_name`` (1-based
-    bigint) and ``n_name`` (total rows).
+    (1) rows bucket on the quantile ``cuts`` (``bucket_expr``: cuts only
+    balance buckets, never the answer, and NULL values rank as a plain
+    window ranks them); (2) a |buckets|-row count aggregate yields
+    cumulative offsets in rank direction; (3) row_number runs per
+    BUCKET — bounded partitions — and the global rank is local rank +
+    broadcast offset. Appends ``rn_name`` (1-based bigint) and
+    ``n_name`` (total rows).
 
-    ``sum_col`` extends the same machinery to GLOBAL SUM windows with no
-    extra pass: the per-bucket aggregate also carries SUM(sum_col), the
-    driver prefix scan accumulates sum offsets exactly (Python Decimal
-    for decimal columns), and the result additionally gets
-    ``sum_total_name`` (grand total, SUM() OVER ()) and — when
-    ``cum_sum_name`` is set — the exact running sum under the same
-    (value dir, tie asc) order (SUM() OVER (ORDER BY … ROWS UNBOUNDED
+    ``sum_cols`` extends the same machinery to GLOBAL SUM windows with
+    no extra pass: the per-bucket aggregate also carries SUM(c) for
+    each column, and the result gets each column's grand total
+    (SUM() OVER ()) under ``total_names`` and, for the columns that
+    ``cum_names`` covers, the exact running sum under the same (value
+    dir, tie asc) order (SUM() OVER (ORDER BY … ROWS UNBOUNDED
     PRECEDING)) as per-bucket window sum + broadcast offset.
     """
     val = F.col(value_col)
-    bucket = F.lit(0)
-    for c in cuts:
-        # coalesce: a NULL value used to yield a NULL bucket, and the
-        # equi-join against the offsets frame silently DROPPED the row
-        # (ADVICE r4). Bucket 0 reproduces plain-window semantics in
-        # both directions: Spark orders NULLS FIRST under asc (bucket 0
-        # is ranked first) and NULLS LAST under desc (bucket 0 is ranked
-        # last), and the within-bucket orderBy applies the same default.
-        bucket = bucket + F.coalesce((val > F.lit(c)).cast("int"), F.lit(0))
     bcol, ocol = f"__bkt_{rn_name}", f"__off_{rn_name}"
-    socol = f"__soff_{rn_name}"
-    d = df.withColumn(bcol, bucket)
-    aggs = [F.count("*").alias("cnt")]
-    if sum_col is not None:
-        aggs.append(F.sum(sum_col).alias("__s"))
-    counts = d.groupBy(bcol).agg(*aggs)
-    # Offsets come from the |buckets|-row count aggregate — bounded by
-    # len(cuts)+1 BY CONSTRUCTION. Round-11 opt: the prefix scan runs
-    # IN-PLAN as window sums over that bounded frame instead of a
-    # blocking collect + createDataFrame round-trip — one fewer
-    # sequential driver job per call at every call site, and the whole
-    # rank becomes a single action. The unpartitioned WindowExec this
-    # plans is fed by the counts aggregate (input cardinality =
-    # |buckets|), the exact class tests/test_window_partition_pins.py
-    # allowlists and structurally checks.
+    sums = [f"__s{i}_{rn_name}" for i in range(len(sum_cols))]
+    soffs = [f"__soff{i}_{rn_name}" for i in range(len(sum_cols))]
+    d = df.withColumn(bcol, bucket_expr(val, cuts))
+    counts = d.groupBy(bcol).agg(
+        F.count("*").alias("cnt"),
+        *[F.sum(c).alias(s) for c, s in zip(sum_cols, sums)],
+    )
+    # The prefix scan runs IN-PLAN as window sums over the |buckets|-row
+    # count aggregate (bounded by len(cuts)+1 by construction), so the
+    # whole rank is a single action with no driver collect. That
+    # unpartitioned WindowExec is the class
+    # tests/test_window_partition_pins.py allowlists and checks.
     border = F.col(bcol).desc() if descending else F.col(bcol).asc()
     w_prev = Window.orderBy(border).rowsBetween(
         Window.unboundedPreceding, -1
@@ -568,21 +547,16 @@ def two_phase_global_rank(
         F.coalesce(F.sum("cnt").over(w_prev), F.lit(0)).alias(ocol),
         F.sum("cnt").over(w_all).alias(n_name),
     ]
-    if sum_col is not None:
+    for s, soff, total in zip(sums, soffs, total_names):
         # window sums widen decimal precision; cast back to the
-        # aggregate's own sum type so downstream column types (and the
-        # declared output schema) are unchanged vs the collect-based
-        # prefix scan. The totals fit by construction: they equal the
-        # global SUM the type was widened for.
-        sum_dt = counts.schema["__s"].dataType
+        # aggregate's own sum type so output column types are those of
+        # SUM(c). The totals fit by construction: they equal the global
+        # SUM the type was widened for.
+        sum_dt = counts.schema[s].dataType
         zero = F.lit(0).cast(sum_dt)
         off_cols += [
-            F.coalesce(F.sum("__s").over(w_prev), zero)
-            .cast(sum_dt)
-            .alias(socol),
-            F.coalesce(F.sum("__s").over(w_all), zero)
-            .cast(sum_dt)
-            .alias(sum_total_name),
+            F.coalesce(F.sum(s).over(w_prev), zero).cast(sum_dt).alias(soff),
+            F.coalesce(F.sum(s).over(w_all), zero).cast(sum_dt).alias(total),
         ]
     offsets = counts.select(*off_cols)
     w_loc = Window.partitionBy(bcol).orderBy(
@@ -591,67 +565,10 @@ def two_phase_global_rank(
     out = d.join(F.broadcast(offsets), bcol).withColumn(
         rn_name, (F.row_number().over(w_loc) + F.col(ocol)).cast("long")
     )
-    if cum_sum_name is not None:
-        w_run = w_loc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        out = out.withColumn(
-            cum_sum_name, F.sum(sum_col).over(w_run) + F.col(socol)
-        )
-    return out.drop(bcol, ocol, socol)
-
-
-def bucketed_running_sums(
-    df: DataFrame,
-    order_col: str,
-    sum_cols: list[str],
-    cuts: list,
-    out_names: list[str],
-) -> DataFrame:
-    """Exact global running SUMs (``SUM(c) OVER (ORDER BY order_col ROWS
-    UNBOUNDED PRECEDING)``) for SEVERAL bigint columns in ONE pass,
-    WITHOUT a single-partition WindowExec — the N-column sibling of
-    ``two_phase_global_rank``'s ``cum_sum_name`` path, for the
-    ECDF/KS-style ops whose cumulative state is more than one counter
-    (round-9 VERDICT #2).
-
-    Same machinery: rows bucket monotonically on ``cuts`` (ties share a
-    bucket via ``bucket_expr``), a |buckets|-row aggregate carries one
-    SUM per column, the driver prefix-scans that bounded frame into
-    per-bucket starting offsets (the same bounded-collect class as the
-    cuts themselves), and each running sum is a per-bucket window plus
-    its broadcast offset. ``df`` must be value-collapsed on
-    ``order_col`` (one row per value) and ``sum_cols`` must be integer
-    (exact driver accumulation); NULL order values land in bucket 0 =
-    Spark's NULLS FIRST ascending default.
-    """
-    bcol = "__bkt_rs"
-    d = df.withColumn(bcol, bucket_expr(F.col(order_col), cuts))
-    counts = d.groupBy(bcol).agg(
-        *[F.sum(c).alias(f"__s_{c}") for c in sum_cols]
-    )
-    rows = sorted(counts.collect(), key=lambda r: r[bcol])
-    acc = {c: 0 for c in sum_cols}
-    data = []
-    for r in rows:
-        data.append((r[bcol], *[acc[c] for c in sum_cols]))
-        for c in sum_cols:
-            v = r[f"__s_{c}"]
-            acc[c] += v if v is not None else 0
-    off_cols = [f"__off_{c}" for c in sum_cols]
-    offsets = df.sparkSession.createDataFrame(
-        data,
-        schema=", ".join(
-            [f"{bcol} int"] + [f"{o} bigint" for o in off_cols]
-        ),
-    )
-    w_loc = (
-        Window.partitionBy(bcol)
-        .orderBy(F.col(order_col).asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = d.join(F.broadcast(offsets), bcol)
-    for c, o, name in zip(sum_cols, off_cols, out_names):
-        out = out.withColumn(name, F.col(o) + F.sum(c).over(w_loc))
-    return out.drop(bcol, *off_cols)
+    w_run = w_loc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    for c, soff, name in zip(sum_cols, soffs, cum_names):
+        out = out.withColumn(name, F.sum(c).over(w_run) + F.col(soff))
+    return out.drop(bcol, ocol, *soffs)
 
 
 def ntile_closed_form(rn: str, n: str, tiles: int) -> Column:
@@ -692,25 +609,18 @@ def win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``PARTITION BY o_orderstatus`` has cardinality 3, so the naive window
     puts a third of the fact table on ONE task — a scale-killer at 100 TB.
-    Instead: (1) one quantile pass picks ~uniform price cut-points (the
-    cuts only balance partitions; results never depend on them); (2) rows
-    get a bucket via monotonic codegen comparisons; (3) a tiny
-    (status × bucket) count aggregate yields per-bucket rank offsets and
-    group sizes, broadcast back; (4) row_number runs per (status, bucket)
-    — bounded partitions — and the global in-group rank is local rank +
-    offset. ntile/percent_rank/cume_dist are then exact integer/rational
-    closed forms of (rank, n): with a unique ordering they are
-    bit-identical to the window-function definitions (and the oracle).
+    Instead the in-group rank and group size come from
+    ``keyed_two_phase`` over price buckets (bounded per-(status,
+    bucket) sorts plus broadcast offsets), and ntile/percent_rank/
+    cume_dist are exact integer/rational closed forms of (rank, n): with
+    a unique ordering they are bit-identical to the window-function
+    definitions (and the oracle).
     """
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    cuts = _dist_cuts(spark, sf_dir, o)
-    price = F.col("o_totalprice")
-    bucket = F.lit(0)
-    for c in cuts:
-        bucket = bucket + (price > F.lit(c)).cast("int")
-    o = o.withColumn("bkt", bucket)
+    cuts = sampled_cuts(spark, sf_dir, "orders_price_cuts", o, "o_totalprice")
+    o = o.withColumn("bkt", bucket_expr(F.col("o_totalprice"), cuts))
     # ONE fact exchange shared by both consumers (guide §2.4): the
     # per-bucket counts and the per-(status, bucket) row_number window
     # both need the rows clustered by (status, bucket), but column
@@ -724,43 +634,17 @@ def win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the materialized partitions; at scale the shuffle replaces the
     # window's own exchange, so net fact movement is unchanged.
     o = o.repartition("o_orderstatus", "bkt").localCheckpoint(eager=False)
-
-    counts = o.groupBy("o_orderstatus", "bkt").agg(F.count("*").alias("cnt"))
-    w_cum = (
-        Window.partitionBy("o_orderstatus")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_grp = Window.partitionBy("o_orderstatus")
-    offsets = counts.select(
-        "o_orderstatus",
-        "bkt",
-        F.coalesce(F.sum("cnt").over(w_cum), F.lit(0)).alias("off"),
-        F.sum("cnt").over(w_grp).alias("n"),
-    )
-    w_loc = Window.partitionBy("o_orderstatus", "bkt").orderBy(
-        F.col("o_totalprice").asc(), F.col("o_orderkey").asc()
-    )
-    rn = (F.row_number().over(w_loc) + F.col("off")).alias("rn")
-    ranked = o.join(F.broadcast(offsets), ["o_orderstatus", "bkt"]).select(
-        "o_orderkey", "o_orderstatus", "n", rn
-    )
-    # NTILE(4): first (n mod 4) tiles hold (n div 4)+1 rows, the rest
-    # (n div 4); ceil(a/b) = (a+b-1) div b keeps it all integer-exact.
-    tile = (
-        F.when(
-            F.expr("rn <= (n % 4) * ((n div 4) + 1)"),
-            F.expr("(rn + (n div 4)) div ((n div 4) + 1)"),
-        )
-        .otherwise(
-            F.expr("(n % 4) + (rn - (n % 4) * ((n div 4) + 1) + (n div 4) - 1) div (n div 4)")
-        )
-        .cast("int")
+    ranked = keyed_two_phase(
+        o,
+        ["o_orderstatus"],
+        [F.col("o_totalprice").asc(), F.col("o_orderkey").asc()],
+        "rn",
+        total="n",
     )
     return ranked.select(
         "o_orderkey",
         "o_orderstatus",
-        tile.alias("quartile"),
+        ntile_closed_form("rn", "n", 4).alias("quartile"),
         F.when(
             F.col("n") > 1,
             (F.col("rn") - 1).cast("double") / (F.col("n") - 1).cast("double"),

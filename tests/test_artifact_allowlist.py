@@ -81,14 +81,12 @@ ALLOWED = {
     "ann_cells": ("index", "IVF vectors bucketed by cell id"),
     "dedup_stoplist_": ("const", "document-frequency stoplist"),
     # --- const: cuts, counts, stats, panels ---------------------------
-    "dist_cuts_totalprice": ("const", "range-partition cuts"),
     "rows_": ("const", "table row-count statistic"),
     "adistinct_": ("const", "approx-distinct statistic"),
-    "cuts_": ("const", "two-phase rank bucket cuts"),
-    "median_price_cuts": ("const", "two-phase median bucket cuts"),
-    "wmedian_price_cuts": ("const", "weighted-median bucket cuts"),
-    "wmedian_targets": ("const", "weighted-median target weights"),
-    "wmedian_bucket_weights": (
+    "cuts_": ("const", "range-bucket cuts of every two-phase op"),
+    # the two wmedian names end in the digest of the cuts they follow
+    "wmedian_targets_": ("const", "weighted-median target weights"),
+    "wmedian_bucket_weights_": (
         "const",
         "|buckets|-row weight totals steering exact selection",
     ),
@@ -96,11 +94,6 @@ ALLOWED = {
     "gram_fixed": ("const", "64x64 Gram matrix statistic"),
     "probe_panel_": ("const", "md5-ranked fixed query panel (eval input)"),
     "lsh_recall_panel": ("const", "vec_id<20 query panel (eval input)"),
-    "abc_part_rev_cuts": ("const", "ABC rank bucket cuts"),
-    "per_customer_spend_cuts": ("const", "decile bucket cuts"),
-    "abc_mig_cuts_": ("const", "per-window ABC bucket cuts"),
-    "pareto_per_user_cuts": ("const", "pareto rank bucket cuts"),
-    "repeat_gap_cuts": ("const", "purchase-gap quantile cuts"),
     # --- materialized: upstream products with many consumers ----------
     "dedup_pairs": ("materialized", "verified near-dup pair table"),
     "dedup_pairs_capped": ("materialized", "capped-shingle pair table"),

@@ -573,7 +573,9 @@ def test_global_cumsum_ops_bucket_at_scale(spark, sf_dir, name, monkeypatch):
     cumulative sum must partition on a __bkt column."""
     import re
 
-    monkeypatch.setenv("SPARK_GRAFT_TWO_PHASE_MIN_ROWS", "0")
+    import dataengineeringutils_spark.operators.windows as W
+
+    monkeypatch.setattr(W, "TWO_PHASE_MIN_ROWS", 0)
     plan = (
         queries()[name](spark, sf_dir)
         ._jdf.queryExecution()

@@ -172,11 +172,11 @@ def test_qte_two_phase_path_matches_local_path(spark, monkeypatch):
     suppress_health_check=[HealthCheck.too_slow],
 )
 def test_two_phase_sum_carry_matches_window(spark, rows, descending, n_cuts):
-    """Round-6 extension: with sum_col set, the helper's running sum and
-    grand total must equal SUM() OVER (ORDER BY ... ROWS UNBOUNDED
-    PRECEDING) / SUM() OVER () for ANY cut set — exact DECIMAL carry
-    through the driver prefix scan included (sum_col is the DECIMAL cast
-    of the value so boundary/None buckets hit the Decimal path)."""
+    """With ``sum_cols`` set, the helper's running sums and grand totals
+    must equal SUM() OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING) /
+    SUM() OVER () for ANY cut set — for a DECIMAL column (exact carry
+    through the in-plan prefix scan, boundary/None buckets included)
+    and a BIGINT one in the same pass."""
     from decimal import Decimal
 
     from pyspark.sql import functions as F
@@ -185,23 +185,28 @@ def test_two_phase_sum_carry_matches_window(spark, rows, descending, n_cuts):
         two_phase_global_rank,
     )
 
-    df = spark.createDataFrame(rows, "v int, tie int").withColumn(
-        "amt", (F.col("tie") % 7 + 1).cast("decimal(10,2)") / 4
+    df = (
+        spark.createDataFrame(rows, "v int, tie int")
+        .withColumn("amt", (F.col("tie") % 7 + 1).cast("decimal(10,2)") / 4)
+        .withColumn("cnt", (F.col("tie") % 3).cast("bigint"))
     )
     vals = sorted({v for v, _ in rows if v is not None})
     pool = vals + [-1000, 1000] + (vals[:1] + vals[-1:])
     cuts = sorted(set(pool[:n_cuts]))
     got = {
-        (r["tie"], r["rn"], Decimal(r["cum"]), Decimal(r["total"]))
+        (
+            r["tie"], r["rn"], Decimal(r["cum"]), Decimal(r["total"]),
+            r["cum_cnt"], r["total_cnt"],
+        )
         for r in two_phase_global_rank(
             df,
             "v",
             "tie",
             cuts,
             descending=descending,
-            sum_col="amt",
-            sum_total_name="total",
-            cum_sum_name="cum",
+            sum_cols=["amt", "cnt"],
+            total_names=["total", "total_cnt"],
+            cum_names=["cum", "cum_cnt"],
         ).collect()
     }
 
@@ -218,9 +223,11 @@ def test_two_phase_sum_carry_matches_window(spark, rows, descending, n_cuts):
         by_tie[r["tie"]] = Decimal(r["amt"])
     ordered = sorted(rows, key=key)
     total = sum(by_tie[t] for _, t in ordered)
-    run = Decimal(0)
+    total_cnt = sum(t % 3 for _, t in ordered)
+    run, run_cnt = Decimal(0), 0
     want = set()
     for i, (_, tie) in enumerate(ordered):
         run += by_tie[tie]
-        want.add((tie, i + 1, run, total))
+        run_cnt += tie % 3
+        want.add((tie, i + 1, run, total, run_cnt, total_cnt))
     assert got == want
