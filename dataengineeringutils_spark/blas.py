@@ -2,7 +2,7 @@
 
 Every PySpark Python worker is its own process, and the bundled
 OpenBLAS defaults its pool to ALL host cores (measured: 32 on the
-local[32] harness). A mapInPandas GEMM kernel therefore runs up to
+local[32] harness). A GEMM kernel in a Python worker therefore runs up to
 32 workers x 32 BLAS threads = 1024 runnable threads on 32 CPUs —
 harmless solo, but under the driver bench's serial 484-query load the
 oversubscription showed up as 2-3x wall-time inflation on the matmul

@@ -531,6 +531,7 @@ def agg_median_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from dataengineeringutils_spark.operators.windows import (
         bucket_expr,
+        join_null_safe,
         sampled_cuts,
     )
 
@@ -566,7 +567,7 @@ def agg_median_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("o_orderstatus", "bkt", "off", "k1", "k2")
     )
-    sel = o.join(F.broadcast(targets), ["o_orderstatus", "bkt"])
+    sel = join_null_safe(o, targets, ["o_orderstatus", "bkt"])
     w_loc = Window.partitionBy("o_orderstatus", "bkt").orderBy("o_totalprice")
     ranked = sel.withColumn("rank", F.row_number().over(w_loc) + F.col("off"))
     picked = ranked.filter((F.col("rank") == F.col("k1")) | (F.col("rank") == F.col("k2")))
@@ -921,6 +922,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_expr,
         bucket_range,
         cuts_tag,
+        join_null_safe,
         sampled_cuts,
     )
 
@@ -1008,7 +1010,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         rng = cond if rng is None else (rng | cond)
     if rng is not None:
         li = li.filter(rng)
-    sel = li.join(F.broadcast(targets), ["l_returnflag", "bkt"])
+    sel = join_null_safe(li, targets, ["l_returnflag", "bkt"])
     w_loc = (
         Window.partitionBy("l_returnflag", "bkt")
         .orderBy(

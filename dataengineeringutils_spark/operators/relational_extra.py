@@ -773,6 +773,7 @@ def sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                                            o_orderkey ASC) AS rn,
                COUNT(*) OVER (PARTITION BY o_orderpriority) AS n
         FROM orders
+        WHERE o_totalprice IS NOT NULL
     )
     SELECT o_orderpriority,
            MIN(CASE WHEN rn = CAST(ceil(0.25 * n) AS BIGINT)
@@ -804,7 +805,8 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical numbers with every sorting partition bounded. Exact
     by construction (integer counts, no float comparisons); equal
     prices collapse to one value row so both engines pick the same
-    value without a row tiebreak.
+    value without a row tiebreak. NULL prices are dropped before n is
+    counted, as SQL's PERCENTILE_DISC does; a NULL priority is a group.
     """
     from dataengineeringutils_spark.operators.windows import (
         grouped_percentile_disc,

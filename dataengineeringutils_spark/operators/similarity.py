@@ -25,6 +25,7 @@ serving path, the bucketed layout would be written out with
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -82,11 +83,41 @@ def np_cosine(a, b) -> np.ndarray:
         return ab / (np.sqrt(aa) * np.sqrt(bb))
 
 
-def _arrow_matrix(col) -> np.ndarray:
-    """(rows, dim) float64 matrix of a non-empty Arrow list<float> column
-    whose lists all have the same length (an embedding column)."""
+def _arrow_matrix(col, name: str = "embedding") -> np.ndarray:
+    """(rows, dim) float64 matrix of an Arrow list<float> embedding
+    column. A NULL list or lists of different lengths have no matrix
+    (a reshape would shift rows silently), so either raises a
+    ``ValueError`` naming the column: embeddings are NOT NULL and of
+    one dimension."""
+    lens = np.diff(col.offsets.to_numpy())
+    if col.null_count or (lens != lens[:1]).any():
+        raise ValueError(
+            f"{name}: {col.null_count} NULL lists, lengths "
+            f"{lens.min()}..{lens.max()}; an embedding column must be "
+            "NOT NULL with one dimension"
+        )
     flat = col.flatten().to_numpy(zero_copy_only=False)
-    return flat.astype(np.float64).reshape(len(col), -1)
+    return flat.astype(np.float64).reshape(len(col), lens[0] if len(lens) else 0)
+
+
+def _arrow_kernel(df: DataFrame, kernel, schema: str) -> DataFrame:
+    """The one Python boundary of the embedding kernels: ``df`` crosses
+    into ``kernel`` through ``mapInArrow``. Each non-empty Arrow batch
+    goes in as a ``pyarrow.RecordBatch`` (embeddings read with
+    ``_arrow_matrix``), and the numpy columns the kernel returns, in
+    ``schema`` order, come back as one RecordBatch. BLAS runs one thread
+    per worker, the task's CPU share (see ``blas.py``)."""
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def run(batches):
+        cap_blas_threads(1)
+        for b in batches:
+            if b.num_rows:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c) for c in kernel(b)], names=names
+                )
+
+    return df.mapInArrow(run, schema)
 
 
 def _per_query_topk(q_ids, vec_ids, cos, k):
@@ -172,6 +203,21 @@ def _block_topk_rows(ids, scores, depth):
     depth = min(depth, scores.shape[1])
     top = np.argsort(-scores, axis=1, kind="stable")[:, :depth]
     return ids[top], depth
+
+
+def _block_gemm_topk(b, q_mat, depth):
+    """Block-GEMM nomination over one Arrow batch of the corpus: rows
+    sorted by vec_id, L2-normalised, scored against the normalised
+    query panel ``q_mat`` in ONE BLAS matmul, and cut to each query's
+    top ``depth`` by ``_block_topk_rows`` (rows are id-sorted, so ties
+    rank on vec_id ASC). Returns the sorted ids, the sorted raw matrix,
+    the (|q|, d) row positions and d."""
+    ids = b.column("vec_id").to_numpy()
+    order = np.argsort(ids, kind="stable")
+    raw = _arrow_matrix(b.column("embedding"))[order]
+    mat = raw / np.linalg.norm(raw, axis=1, keepdims=True)
+    pos, d = _block_topk_rows(np.arange(len(order)), q_mat @ mat.T, depth)
+    return ids[order], raw, pos, d
 
 
 @query(
@@ -288,33 +334,24 @@ def hyperplane_bucket(emb: str | Column, planes: list[list[float]]) -> Column:
     return bucket
 
 
-def _lsh_signature_kernel(it):
-    """mapInPandas kernel: one numpy matmul signs ALL 16 tables' planes
-    per Arrow batch — (N, 64) @ (64, 96) — instead of 96 interpreted
-    higher-order-function dot products per vector. Emits compact
-    (vec_id, table, bucket) rows; vectors rejoin after candidate dedup."""
-    import numpy as np
-    import pandas as pd
-    cap_blas_threads(1)  # one BLAS thread per worker = task's CPU share
+def _lsh_signature_kernel(b):
+    """One numpy matmul signs ALL 16 tables' planes per Arrow batch —
+    (N, 64) @ (64, 96) — instead of 96 interpreted higher-order-function
+    dot products per vector. Emits compact (vec_id, table, bucket) rows;
+    vectors rejoin after candidate dedup."""
     planes = np.asarray(_hyperplanes(n_tables=N_TABLES))  # (T, n, dim)
     n_tables, n_bits, dim = planes.shape
     m = planes.reshape(n_tables * n_bits, dim).T  # (dim, T*n)
     weights = (1 << np.arange(n_bits, dtype=np.int64))  # bit weights
-    for pdf in it:
-        if not len(pdf):
-            continue
-        emb = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        bits = (emb @ m) > 0  # (N, T*n)
-        buckets = (
-            bits.reshape(len(pdf), n_tables, n_bits).astype(np.int64) * weights
-        ).sum(axis=2)  # (N, T)
-        yield pd.DataFrame(
-            {
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_tables),
-                "t": np.tile(np.arange(n_tables, dtype=np.int32), len(pdf)),
-                "bucket": buckets.reshape(-1),
-            }
-        )
+    bits = (_arrow_matrix(b.column("embedding")) @ m) > 0  # (N, T*n)
+    buckets = (
+        bits.reshape(b.num_rows, n_tables, n_bits).astype(np.int64) * weights
+    ).sum(axis=2)  # (N, T)
+    return (
+        np.repeat(b.column("vec_id").to_numpy(), n_tables),
+        np.tile(np.arange(n_tables, dtype=np.int32), b.num_rows),
+        buckets.reshape(-1),
+    )
 
 
 def _lsh_signatures_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,18 +367,13 @@ def _lsh_signatures_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build() -> DataFrame:
         e = table(spark, sf_dir, "embeddings")
-        return e.select("vec_id", "embedding").mapInPandas(
-            _lsh_signature_kernel, schema="vec_id long, t int, bucket long"
+        return _arrow_kernel(
+            e.select("vec_id", "embedding"),
+            _lsh_signature_kernel,
+            "vec_id long, t int, bucket long",
         )
 
     return df_artifact(spark, sf_dir, "lsh_signatures", _build)
-
-
-def _lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH top-3 SEARCH over the persisted signature index — bucket
-    equi-join, candidate dedup, exact cosine re-rank — computed in the
-    calling query's plan (the honest per-query serving work)."""
-    return _lsh_topk_build(spark, sf_dir)
 
 
 @query(
@@ -394,34 +426,27 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("q_id").cast("bigint"), "n_neighbors", "recall_ok")
 
 
-def _lsh_topk_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LSH search plan (bucket join -> dedup -> exact re-rank),
-    reading signatures from the persisted index artifact.
+def _lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH top-3 SEARCH over the persisted signature index — bucket
+    equi-join, candidate dedup, exact cosine re-rank — computed in the
+    calling query's plan (the honest per-query serving work).
 
     The re-rank scores candidates in an Arrow kernel against the raw
     query panel (a closure, no query-vector join) with ``np_cosine``,
     bit-identical to ``cosine()``, and each batch emits only its top-3
     per query; the final ``row_number`` over that small union gives the
     same global top-3 as ranking every candidate."""
-    import pyarrow as pa
-
     q_ids, q_raw = _query_panel(spark, sf_dir)
 
-    def rerank(batches, q_ids=q_ids, q_raw=q_raw):
-        for b in batches:
-            if not b.num_rows:
-                continue
-            qid = b.column("q_id").to_numpy()
-            vid = b.column("vec_id").to_numpy()
-            cos = np_cosine(
-                _arrow_matrix(b.column("embedding")),
-                q_raw[np.searchsorted(q_ids, qid)],
-            )
-            top = _per_query_topk(qid, vid, cos, 3)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qid[top]), pa.array(vid[top]), pa.array(cos[top])],
-                names=["q_id", "vec_id", "cos_sim"],
-            )
+    def rerank(b):
+        qid = b.column("q_id").to_numpy()
+        vid = b.column("vec_id").to_numpy()
+        cos = np_cosine(
+            _arrow_matrix(b.column("embedding")),
+            q_raw[np.searchsorted(q_ids, qid)],
+        )
+        top = _per_query_topk(qid, vid, cos, 3)
+        return qid[top], vid[top], cos[top]
 
     e = table(spark, sf_dir, "embeddings")
     sig = _lsh_signatures_cached(spark, sf_dir)
@@ -443,10 +468,12 @@ def _lsh_topk_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "vec_id")
         .distinct()
     )
-    scored = (
-        e.join(F.broadcast(cand_ids), "vec_id")
-        .select("q_id", "vec_id", "embedding")
-        .mapInArrow(rerank, "q_id long, vec_id long, cos_sim double")
+    scored = _arrow_kernel(
+        e.join(F.broadcast(cand_ids), "vec_id").select(
+            "q_id", "vec_id", "embedding"
+        ),
+        rerank,
+        "q_id long, vec_id long, cos_sim double",
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
     return (
@@ -744,39 +771,35 @@ def sim_ann_ivf_fixedk(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_BLOCKS = 16  # all-pairs block grid: NB*(NB+1)/2 = 136 block-pair tasks
 
 
-def _block_pair_cosine(it):
-    """mapInPandas kernel: one input row = one block pair; emits the
-    (vec_a < vec_b, cosine >= 0.95) pairs from that block's cross product
-    via a single vectorized matmul."""
-    import numpy as np
-    import pandas as pd
-    cap_blas_threads(1)  # one BLAS thread per worker = task's CPU share
-    for pdf in it:
-        out_a, out_b, out_c = [], [], []
-        for _, row in pdf.iterrows():
-            ids_x = np.asarray([v["vec_id"] for v in row["vs_x"]], dtype=np.int64)
-            ids_y = np.asarray([v["vec_id"] for v in row["vs_y"]], dtype=np.int64)
-            mx = np.asarray([v["embedding"] for v in row["vs_x"]], dtype=np.float64)
-            my = np.asarray([v["embedding"] for v in row["vs_y"]], dtype=np.float64)
-            mx /= np.linalg.norm(mx, axis=1, keepdims=True)
-            my /= np.linalg.norm(my, axis=1, keepdims=True)
-            sims = mx @ my.T
-            ii, jj = np.nonzero(sims >= 0.95)
-            if row["bid_x"] == row["bid_y"]:
-                keep = ids_x[ii] < ids_y[jj]
-                ii, jj = ii[keep], jj[keep]
-            a, b = ids_x[ii], ids_y[jj]
-            lo, hi = np.minimum(a, b), np.maximum(a, b)
-            out_a.append(lo)
-            out_b.append(hi)
-            out_c.append(sims[ii, jj])
-        yield pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a) if out_a else np.array([], dtype=np.int64),
-                "vec_b": np.concatenate(out_b) if out_b else np.array([], dtype=np.int64),
-                "cos_sim": np.concatenate(out_c) if out_c else np.array([], dtype=np.float64),
-            }
-        )
+def _block_pair_cosine(b):
+    """One input row = one block pair; emits the (vec_a < vec_b, cosine
+    >= 0.95) pairs from that block's cross product via a single
+    vectorized matmul. The blocks' struct lists are read through their
+    Arrow offsets: one normalised matrix per side, row-sliced per pair."""
+
+    def side(s):
+        col = b.column(f"vs_{s}")
+        off = col.offsets.to_numpy()
+        vs = col.flatten()
+        mat = _arrow_matrix(vs.field("embedding"), f"vs_{s}.embedding")
+        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+        return off - off[0], vs.field("vec_id").to_numpy(), mat
+
+    (ox, ids_x, mx), (oy, ids_y, my) = side("x"), side("y")
+    same = b.column("bid_x").to_numpy() == b.column("bid_y").to_numpy()
+    out_a, out_b, out_c = [], [], []
+    for r in range(b.num_rows):
+        sx, sy = slice(ox[r], ox[r + 1]), slice(oy[r], oy[r + 1])
+        sims = mx[sx] @ my[sy].T
+        ii, jj = np.nonzero(sims >= 0.95)
+        a, c = ids_x[sx][ii], ids_y[sy][jj]
+        if same[r]:
+            keep = a < c
+            ii, jj, a, c = ii[keep], jj[keep], a[keep], c[keep]
+        out_a.append(np.minimum(a, c))
+        out_b.append(np.maximum(a, c))
+        out_c.append(sims[ii, jj])
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_c)
 
 
 @query(
@@ -798,7 +821,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Block-matrix formulation: vectors are hashed into N_BLOCKS blocks, the
     (tiny) per-block vector lists self-join into NB*(NB+1)/2 block-pair
-    rows, and an Arrow-batched ``mapInPandas`` kernel computes each
+    rows, and an Arrow kernel (``_arrow_kernel``) computes each
     block pair's full cosine matrix with one numpy matmul — BLAS-
     vectorized, ~100x the throughput of per-pair JVM expression eval.
     Every pair of blocks meets exactly once, so coverage is exhaustive
@@ -820,8 +843,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = x.join(y, F.col("bid_x") <= F.col("bid_y")).repartition(
         spark.sparkContext.defaultParallelism
     )
-    pairs = grid.mapInPandas(
-        _block_pair_cosine, schema="vec_a long, vec_b long, cos_sim double"
+    pairs = _arrow_kernel(
+        grid, _block_pair_cosine, "vec_a long, vec_b long, cos_sim double"
     )
     return pairs.select("vec_a", "vec_b", F.round("cos_sim", 6).alias("cos_sim"))
 
@@ -1223,37 +1246,19 @@ def sim_block_matmul_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     20×64 float closure no matter how large the corpus grows, so the
     kernel stays O(corpus) with a constant factor, never O(corpus²).
     """
-    import pandas as pd
-
     e = table(spark, sf_dir, "embeddings")
     q_ids, q_mat = collect_panel(e, BLOCK_TOPK_PANEL_K, sf_dir)
 
-    def nominate(batches):
-
-        cap_blas_threads(1)  # one BLAS thread per worker = task's CPU share
-        for pdf in batches:
-            order = np.argsort(
-                np.asarray(pdf["vec_id"], dtype=np.int64), kind="stable"
-            )
-            ids = np.asarray(pdf["vec_id"], dtype=np.int64)[order]
-            mat = np.stack(pdf["embedding"].to_numpy()[order]).astype(
-                np.float64
-            )
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            scores = q_mat @ mat.T  # |q| × |block|
-            top, depth = _block_topk_rows(
-                ids, scores, BLOCK_TOPK_PER_BLOCK + 1
-            )
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(q_ids, depth),
-                    "neighbor_id": top.reshape(len(q_ids) * depth),
-                }
-            )
+    def nominate(b):
+        ids, _, pos, d = _block_gemm_topk(b, q_mat, BLOCK_TOPK_PER_BLOCK + 1)
+        return np.repeat(q_ids, d), ids[pos].reshape(-1)
 
     cands = (
-        e.select("vec_id", "embedding")
-        .mapInPandas(nominate, "q_id long, neighbor_id long")
+        _arrow_kernel(
+            e.select("vec_id", "embedding"),
+            nominate,
+            "q_id long, neighbor_id long",
+        )
         .filter(F.col("q_id") != F.col("neighbor_id"))
         .distinct()
     )
@@ -1340,7 +1345,7 @@ def embeddings_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Since Xᵀ(Xv) = (XᵀX)v, the iterative part needs only G — 64×64
     doubles, 32 KB — so the DATA is scanned exactly once regardless of
-    iteration count. One Arrow-batched numpy pass (`mapInPandas`) emits
+    iteration count. One Arrow-batched numpy pass (`_arrow_kernel`) emits
     per-batch int64 Gram partials (4096 longs per batch, merged in the
     driver: int64 addition is exact and order-independent, and skipping
     the groupBy exchange saves a shuffle stage); every subsequent
@@ -1348,7 +1353,7 @@ def embeddings_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB that is 1 scan with map-side-combined partials vs the 3
     scans of the v-recursion form — and adding iterations for tighter
     convergence costs nothing. (Measured 2.6 s → 0.65 s at sf0.1 vs the
-    per-iteration mapInPandas form; the old join/agg form was 5.1 s.)
+    per-iteration kernel form; the old join/agg form was 5.1 s.)
 
     Cross-engine exactness WITHOUT decimal: every Gram product is
     floor-quantized at 10⁻¹² and accumulated as int64 — integer sums
@@ -1417,27 +1422,23 @@ def _compute_gram_fixed(
     partial addition cannot overflow int64; the driver merges in
     Python ints (unbounded) either way, so both paths are bit-identical
     (pinned by test_round4_scale.py)."""
-    import numpy as np
-    import pandas as pd
-
     e = table(spark, sf_dir, "embeddings").select("embedding")
+    idx = np.arange(PI_DIM, dtype=np.int32)
+    ii = np.repeat(idx, PI_DIM) + 1
+    jj = np.tile(idx, PI_DIM) + 1
 
-    def gram_partials(batches):
-        idx = np.arange(PI_DIM, dtype=np.int32)
-        ii = np.repeat(idx, PI_DIM) + 1
-        jj = np.tile(idx, PI_DIM) + 1
-        for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            acc = np.zeros((PI_DIM, PI_DIM), dtype=np.int64)
-            # chunked so the (rows × 64 × 64) product tensor stays tens
-            # of MB regardless of Arrow batch size
-            for c0 in range(0, mat.shape[0], 512):
-                chunk = mat[c0 : c0 + 512]
-                prod = chunk[:, :, None] * chunk[:, None, :]
-                acc += np.floor(prod * 1e12).astype(np.int64).sum(axis=0)
-            yield pd.DataFrame({"i": ii, "j": jj, "pg": acc.reshape(-1)})
+    def gram_partials(b):
+        mat = _arrow_matrix(b.column("embedding"))
+        acc = np.zeros((PI_DIM, PI_DIM), dtype=np.int64)
+        # chunked so the (rows × 64 × 64) product tensor stays tens
+        # of MB regardless of Arrow batch size
+        for c0 in range(0, mat.shape[0], 512):
+            chunk = mat[c0 : c0 + 512]
+            prod = chunk[:, :, None] * chunk[:, None, :]
+            acc += np.floor(prod * 1e12).astype(np.int64).sum(axis=0)
+        return ii, jj, acc.reshape(-1)
 
-    partials = e.mapInPandas(gram_partials, "i int, j int, pg long")
+    partials = _arrow_kernel(e, gram_partials, "i int, j int, pg long")
     if two_phase is None:
         two_phase = e.rdd.getNumPartitions() > GRAM_TWO_PHASE_PARTS
     if two_phase:
@@ -1528,26 +1529,18 @@ def embeddings_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed in-kernel, counted by an 8-byte group-by. One scan, one
     tiny shuffle — at 100 TB the projection runs at scan speed.
     """
-    import numpy as np
-    import pandas as pd
-
     v, _ = _pi_vector(gram_fixed_cached(spark, sf_dir))
     v_np = np.asarray(v, dtype=np.float64)
 
-    def project(batches, v_np=v_np):
-        for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            s_fix = np.floor((mat * v_np) * 1e12).astype(np.int64).sum(axis=1)
-            p = s_fix.astype(np.float64) / 1e12
-            yield pd.DataFrame(
-                {
-                    "bucket": np.floor(p * PCA_BUCKET_SCALE).astype(np.int64),
-                }
-            )
+    def project(b):
+        mat = _arrow_matrix(b.column("embedding"))
+        s_fix = np.floor((mat * v_np) * 1e12).astype(np.int64).sum(axis=1)
+        p = s_fix.astype(np.float64) / 1e12
+        return (np.floor(p * PCA_BUCKET_SCALE).astype(np.int64),)
 
     e = table(spark, sf_dir, "embeddings").select("embedding")
     return (
-        e.mapInPandas(project, "bucket bigint")
+        _arrow_kernel(e, project, "bucket bigint")
         .groupBy("bucket")
         .agg(F.count("*").alias("n_vecs"))
     )
@@ -1910,9 +1903,6 @@ def embeddings_outlier_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFram
     multiplication (never pow — libm pow(y,2) and numpy's integer-power
     multiply can differ in the last ulp).
     """
-    import numpy as np
-    import pandas as pd
-
     e = table(spark, sf_dir, "embeddings").select("embedding")
     agg = (
         e.select(F.posexplode("embedding").alias("pos", "xr"))
@@ -1939,18 +1929,14 @@ def embeddings_outlier_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFram
     mu = np.asarray(mean[1:], dtype=np.float64)
     sg = np.asarray(sd[1:], dtype=np.float64)
 
-    def scores(batches, mu=mu, sg=sg):
-        for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            z = (mat - mu) / sg
-            q = np.floor(z * z * 1e9).astype(np.int64).sum(axis=1)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "qsum": q}
-            )
+    def scores(b):
+        z = (_arrow_matrix(b.column("embedding")) - mu) / sg
+        q = np.floor(z * z * 1e9).astype(np.int64).sum(axis=1)
+        return b.column("vec_id").to_numpy(), q
 
     full = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return (
-        full.mapInPandas(scores, "vec_id bigint, qsum bigint")
+        _arrow_kernel(full, scores, "vec_id bigint, qsum bigint")
         .select(
             "vec_id",
             F.round(F.col("qsum").cast("double") / F.lit(1e9), 4).alias("m2"),
@@ -2167,35 +2153,17 @@ def embeddings_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFram
     100 TB the nominate stage swaps to the IVF/LSH candidate path — the
     eval contract (probe panel, vote, accuracy grid) is unchanged.
     """
-    import pandas as pd
-
     e = table(spark, sf_dir, "embeddings")
     q_ids, q_mat = collect_panel(e, KNN_EVAL_PANEL_K, sf_dir)
 
-    def nominate(batches):
-
-        cap_blas_threads(1)  # one BLAS thread per worker = task's CPU share
-        for pdf in batches:
-            order = np.argsort(
-                np.asarray(pdf["vec_id"], dtype=np.int64), kind="stable"
-            )
-            ids = np.asarray(pdf["vec_id"], dtype=np.int64)[order]
-            mat = np.stack(pdf["embedding"].to_numpy()[order]).astype(
-                np.float64
-            )
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            scores = q_mat @ mat.T
-            top, depth = _block_topk_rows(ids, scores, 6 + 1)
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(q_ids, depth),
-                    "cand_id": top.reshape(len(q_ids) * depth),
-                }
-            )
+    def nominate(b):
+        ids, _, pos, d = _block_gemm_topk(b, q_mat, 6 + 1)
+        return np.repeat(q_ids, d), ids[pos].reshape(-1)
 
     cands = (
-        e.select("vec_id", "embedding")
-        .mapInPandas(nominate, "q_id long, cand_id long")
+        _arrow_kernel(
+            e.select("vec_id", "embedding"), nominate, "q_id long, cand_id long"
+        )
         .filter(F.col("q_id") != F.col("cand_id"))
         .distinct()
     )
@@ -2320,46 +2288,25 @@ def embeddings_sign_quantization_eval(spark: SparkSession, sf_dir: str) -> DataF
     sequential-order cosine / zip_with Hamming so final ranks match the
     oracle bit for bit. The corpus streams once and never shuffles.
     """
-    import pandas as pd
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", l2_norm("embedding").alias("nrm")
     )
     q_ids, q_mat = collect_panel(e, SIGNQ_PANEL_K, sf_dir)
     q_sign = np.where(q_mat >= 0.0, 1.0, -1.0)
 
-    def nominate(batches):
-
-        cap_blas_threads(1)  # one BLAS thread per worker = task's CPU share
-        for pdf in batches:
-            order = np.argsort(
-                np.asarray(pdf["vec_id"], dtype=np.int64), kind="stable"
-            )
-            ids = np.asarray(pdf["vec_id"], dtype=np.int64)[order]
-            raw = np.stack(pdf["embedding"].to_numpy()[order]).astype(
-                np.float64
-            )
-            mat = raw / np.linalg.norm(raw, axis=1, keepdims=True)
-            cos_top, d1 = _block_topk_rows(ids, q_mat @ mat.T, 6 + 1)
-            sgn = np.where(raw >= 0.0, 1.0, -1.0)
-            ham_top, d2 = _block_topk_rows(ids, q_sign @ sgn.T, 6 + 1)
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(
-                        [np.repeat(q_ids, d1), np.repeat(q_ids, d2)]
-                    ),
-                    "cand_id": np.concatenate(
-                        [
-                            cos_top.reshape(len(q_ids) * d1),
-                            ham_top.reshape(len(q_ids) * d2),
-                        ]
-                    ),
-                }
-            )
+    def nominate(b):
+        ids, raw, cos_pos, d1 = _block_gemm_topk(b, q_mat, 6 + 1)
+        sgn = np.where(raw >= 0.0, 1.0, -1.0)
+        ham_top, d2 = _block_topk_rows(ids, q_sign @ sgn.T, 6 + 1)
+        return (
+            np.concatenate([np.repeat(q_ids, d1), np.repeat(q_ids, d2)]),
+            np.concatenate([ids[cos_pos].reshape(-1), ham_top.reshape(-1)]),
+        )
 
     cands = (
-        e.select("vec_id", "embedding")
-        .mapInPandas(nominate, "q_id long, cand_id long")
+        _arrow_kernel(
+            e.select("vec_id", "embedding"), nominate, "q_id long, cand_id long"
+        )
         .filter(F.col("q_id") != F.col("cand_id"))
         .distinct()
     )
@@ -2514,46 +2461,24 @@ def _exact_topk_inplan(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     ``row_number`` re-rank of the nominated union. depth >> k keeps the
     nomination exact (a global top-k member is inside its block's
     top-depth under any ulp-level score disagreement)."""
-    import pyarrow as pa
-
     q_ids, q_raw = _query_panel(spark, sf_dir)
     q_mat = q_raw / np.linalg.norm(q_raw, axis=1, keepdims=True)
     depth = max(2 * k, 8)
 
-    def nominate(batches, q_ids=q_ids, q_raw=q_raw, q_mat=q_mat, depth=depth):
-        cap_blas_threads(1)  # one BLAS thread per worker = task's share
-        for b in batches:
-            if not b.num_rows:
-                continue
-            ids = b.column("vec_id").to_numpy()
-            bord = np.argsort(ids, kind="stable")
-            ids = ids[bord]
-            raw = _arrow_matrix(b.column("embedding"))[bord]
-            mat = raw / np.linalg.norm(raw, axis=1, keepdims=True)
-            # rows are id-sorted, so ranking positions ties on vec_id ASC
-            pos, d = _block_topk_rows(
-                np.arange(len(ids)), q_mat @ mat.T, depth
-            )
-            cos = np_cosine(raw[pos], q_raw[:, None, :])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.repeat(q_ids, d)),
-                    pa.array(ids[pos].reshape(-1)),
-                    pa.array(cos.reshape(-1)),
-                ],
-                names=["q_id", "vec_id", "cos_sim"],
-            )
+    def nominate(b):
+        ids, raw, pos, d = _block_gemm_topk(b, q_mat, depth)
+        cos = np_cosine(raw[pos], q_raw[:, None, :])
+        return np.repeat(q_ids, d), ids[pos].reshape(-1), cos.reshape(-1)
 
     # no dedup needed: every vec_id lives in exactly one Arrow batch of
     # the scan, so (q_id, vec_id) nominations are unique by construction
     # — the former .distinct() was a pure extra exchange (guide §2.4:
     # "a distinct on data that is already unique")
-    scored = (
-        table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .mapInArrow(nominate, "q_id long, vec_id long, cos_sim double")
-        .filter(F.col("q_id") != F.col("vec_id"))
-    )
+    scored = _arrow_kernel(
+        table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+        nominate,
+        "q_id long, vec_id long, cos_sim double",
+    ).filter(F.col("q_id") != F.col("vec_id"))
     w_q = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id").asc()
     )

@@ -265,6 +265,20 @@ def table_distinct(spark, sf_dir: str, tbl: str, col: str) -> int:
     )
 
 
+def join_null_safe(df: DataFrame, small: DataFrame, keys: list[str]) -> DataFrame:
+    """Inner join of ``df`` to the broadcast ``small`` frame on ``keys``,
+    matching NULL to NULL (``<=>``): GROUP BY and PARTITION BY keep a
+    NULL group, so a two-phase operator's rows must meet that group's
+    per-bucket offsets too. Columns come out as ``df.join(small, keys)``
+    orders them: ``keys``, then ``df``'s, then ``small``'s."""
+    rest = [c for c in small.columns if c not in keys]
+    right = small.select(*[F.col(k).alias(f"__r_{k}") for k in keys], *rest)
+    cond = [F.col(k).eqNullSafe(F.col(f"__r_{k}")) for k in keys]
+    return df.join(F.broadcast(right), cond).select(
+        *keys, *[c for c in df.columns if c not in keys], *rest
+    )
+
+
 def keyed_two_phase(
     df: DataFrame,
     groups: list[str],
@@ -321,7 +335,7 @@ def keyed_two_phase(
         F.coalesce(F.sum("__bw").over(w_cum), F.lit(0)).alias("__off"),
         *([F.sum("__bw").over(w_grp).alias(total)] if total else []),
     )
-    joined = df.join(F.broadcast(offsets), [*groups, "bkt"])
+    joined = join_null_safe(df, offsets, [*groups, "bkt"])
     if weight is None:
         w_loc = Window.partitionBy(*groups, "bkt").orderBy(*order_cols)
         local = F.row_number().over(w_loc).cast("long")
@@ -479,11 +493,12 @@ def grouped_percentile_disc(
         .orderBy(F.col(value_col).asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    sel = (
-        vc.join(F.broadcast(tb), [*groups, "bkt"])
-        .withColumn("__cum", F.sum("__cnt").over(w_loc))
-        .join(F.broadcast(targets), [*groups, "bkt"])
-        .filter(F.col("__off") + F.col("__cum") >= F.col("__k"))
+    keys = [*groups, "bkt"]
+    cum = join_null_safe(vc, tb, keys).withColumn(
+        "__cum", F.sum("__cnt").over(w_loc)
+    )
+    sel = join_null_safe(cum, targets, keys).filter(
+        F.col("__off") + F.col("__cum") >= F.col("__k")
     )
     return sel.groupBy(*groups, "p").agg(F.min(value_col).alias(out))
 

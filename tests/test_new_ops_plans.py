@@ -309,29 +309,29 @@ def test_weighted_median_fact_window_is_bucketed(spark, sf_dir):
 
 def test_lsh_signatures_are_arrow_batched(spark, sf_dir):
     # the signature kernel (the INDEX build) must be a vectorized Arrow
-    # mapInPandas, not a per-row Python UDF
+    # mapInArrow, not a per-row Python UDF
     from dataengineeringutils_spark.operators.similarity import (
+        _arrow_kernel,
         _exact_topk_inplan,
         _lsh_signature_kernel,
         _lsh_topk,
     )
     from dataengineeringutils_spark.tables import table
 
-    sig = (
-        table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .mapInPandas(
-            _lsh_signature_kernel, schema="vec_id long, t int, bucket long"
-        )
+    sig = _arrow_kernel(
+        table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+        _lsh_signature_kernel,
+        "vec_id long, t int, bucket long",
     )
     plan = _plan(sig)
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "BatchEvalPython" not in plan, plan
     # the per-call SEARCH plan serves the persisted signature index —
     # it must not re-run the signature kernel (round-12 artifact line:
-    # index persists, search is timed)
+    # index persists, search is timed): its one Python crossing is the
+    # re-rank
     search = _plan(_lsh_topk(spark, sf_dir))
-    assert "MapInPandas" not in search, search
+    assert search.split("\n\n")[0].count("MapInArrow") == 1, search
     assert "Scan parquet" in search, search
     # candidate scoring is the np_cosine Arrow kernel, in the LSH re-rank
     # and in the exact top-k nomination: no interpreted per-row cosine
@@ -360,7 +360,7 @@ def test_triangle_count_wedges_are_equi_joins(spark, sf_dir):
 
 def test_block_matmul_nominates_via_arrow(spark, sf_dir):
     plan = _plan(queries()["sim_block_matmul_topk"](spark, sf_dir))
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "BatchEvalPython" not in plan, plan
     # exact re-rank joins the tiny query panel broadcast
     assert "BroadcastHashJoin" in plan, plan

@@ -75,7 +75,7 @@ def test_knn_eval_nominate_then_rescore(spark, sf_dir):
     # interpreted cosines; the 3-NN cut prunes via WindowGroupLimit and
     # the probe panel joins back broadcast
     tree = _tree(queries()["embeddings_knn_classifier_eval"](spark, sf_dir))
-    assert tree.count("MapInPandas") == 1, tree
+    assert tree.count("MapInArrow") == 1, tree
     assert "WindowGroupLimit" in tree, tree
     assert "BroadcastHashJoin" in tree, tree
     assert "SortMergeJoin" not in tree, tree
@@ -147,9 +147,9 @@ def test_session_funnel_no_joins(spark, sf_dir):
 def test_threshold_components_no_corpus_broadcast(spark, sf_dir):
     # the pair scan is the block self-join kernel: corpus blocks meet in
     # a (bid_x <= bid_y) nested-loop over |blocks|^2/2 LIST rows, and the
-    # Python crossing is the single mapInPandas GEMM kernel
+    # Python crossing is the single mapInArrow GEMM kernel
     plan = _plan(queries()["sim_threshold_components"](spark, sf_dir))
-    assert plan.count("MapInPandas") <= 1, plan
+    assert plan.count("MapInArrow") <= 1, plan
 
 
 def test_runtime_bloom_filter_under_fact_scan(spark, sf_dir):

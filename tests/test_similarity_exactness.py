@@ -6,19 +6,29 @@
   cannot reorder a top-k.
 - k-means keeps matching its oracle when a seed cluster empties: an
   emptied cluster has no centroid and must not win the argmin.
+- Every embedding kernel crosses into Python through one Arrow
+  boundary (``_arrow_kernel``) and reads its vectors with
+  ``_arrow_matrix``, which refuses a column no matrix can hold.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 
 import duckdb
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
-from dataengineeringutils_spark.operators.similarity import cosine, np_cosine
+import dataengineeringutils_spark.operators.similarity as sim
+from dataengineeringutils_spark.operators.similarity import (
+    _arrow_matrix,
+    cosine,
+    np_cosine,
+)
 from dataengineeringutils_spark.registry import oracle_sql, queries
 from dataengineeringutils_spark.tables import table
 
@@ -71,3 +81,65 @@ def test_kmeans_emptied_cluster_never_wins_argmin(spark, tmp_path):
     )
     want = con.execute(oracle_sql()["sim_kmeans_lloyd"]).fetchall()
     assert [tuple(r) for r in got] == want
+
+
+def test_arrow_matrix_is_the_stacked_float64_matrix():
+    rows = np.random.default_rng(3).standard_normal((5, 64)).astype(np.float32)
+    col = pa.array(list(rows), pa.list_(pa.float32()))
+    want = np.stack(list(rows)).astype(np.float64)
+    got = _arrow_matrix(col.slice(1))
+    assert got.dtype == np.float64
+    assert (got.view(np.int64) == want[1:].view(np.int64)).all()
+
+
+@pytest.mark.parametrize(
+    "lists",
+    [
+        [[0.5] * 64, None, [0.5] * 64, [0.5] * 64],
+        [[0.5] * 64, [0.5] * 63, [0.5] * 64, [0.5] * 65],
+    ],
+    ids=["null_list", "ragged_lists"],
+)
+def test_arrow_matrix_rejects_what_a_matrix_cannot_hold(lists):
+    col = pa.array(lists, pa.list_(pa.float32()))
+    with pytest.raises(ValueError, match="embedding"):
+        _arrow_matrix(col)
+
+
+def _top_defs(tree):
+    return {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+
+def test_embedding_kernels_share_one_arrow_boundary():
+    """``_arrow_kernel`` is the only ``mapInArrow`` call and the only BLAS
+    cap in the module, no ``mapInPandas`` is left, and every kernel it
+    runs reads its vectors through ``_arrow_matrix``, never ``np.stack``."""
+    with open(sim.__file__) as fh:
+        src = fh.read()
+    assert "mapInPandas" not in src
+    tops = _top_defs(ast.parse(src))
+    crossings, kernels = [], []
+    for owner, fn in tops.items():
+        nested = {
+            n.name: n for n in ast.walk(fn) if isinstance(n, ast.FunctionDef)
+        }
+        for call in (n for n in ast.walk(fn) if isinstance(n, ast.Call)):
+            f = call.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name in ("cap_blas_threads", "mapInArrow"):
+                crossings.append((name, owner))
+            if name == "_arrow_kernel":
+                k = call.args[1].id
+                kernels.append((owner, nested.get(k) or tops[k]))
+    assert sorted(crossings) == [
+        ("cap_blas_threads", "_arrow_kernel"),
+        ("mapInArrow", "_arrow_kernel"),
+    ]
+    assert len(kernels) == 10, [(o, k.name) for o, k in kernels]
+    for owner, k in kernels:
+        names = {
+            getattr(n, "id", None) or getattr(n, "attr", None)
+            for n in ast.walk(k)
+        }
+        assert "stack" not in names, (owner, k.name)
+        assert names & {"_arrow_matrix", "_block_gemm_topk"}, (owner, k.name)

@@ -167,3 +167,75 @@ def test_weighted_median_follows_swapped_cuts(
 
     monkeypatch.setattr(W, "sampled_cuts", every_other)
     assert canon_frame(op(spark, sf_dir).toPandas()) == want
+
+
+def _null_copy(sf_dir, out, tbl, every):
+    """A copy of the fixture in ``out`` whose ``tbl`` column c is NULL
+    on every ``every[c]``-th row; the other tables link to ``sf_dir``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from dataengineeringutils_spark.tables import TABLES
+
+    for t in TABLES:
+        if t != tbl:
+            os.symlink(f"{sf_dir}/{t}.parquet", out / f"{t}.parquet")
+    data = pq.read_table(f"{sf_dir}/{tbl}.parquet")
+    for col, n in every.items():
+        i = data.schema.get_field_index(col)
+        field = data.schema.field(i)
+        mask = pa.array(np.arange(data.num_rows) % n == 0)
+        nulled = pc.if_else(mask, pa.scalar(None, field.type), data.column(i))
+        data = data.set_column(i, field, nulled)
+    pq.write_table(data, out / f"{tbl}.parquet")
+    return str(out)
+
+
+def _matches_oracle(spark, sf_dir, name):
+    from tools.verify_local import compare
+
+    issues, _ = compare(
+        name,
+        queries()[name](spark, sf_dir).toPandas(),
+        duck_connect(sf_dir).execute(oracle_sql()[name]).fetchdf(),
+    )
+    assert not issues, (name, issues)
+
+
+@pytest.mark.parametrize(
+    "name, tbl, col",
+    [
+        ("win_distribution", "orders", "o_orderstatus"),
+        ("agg_median_twophase", "orders", "o_orderstatus"),
+        ("agg_weighted_median", "lineitem", "l_returnflag"),
+    ],
+)
+def test_two_phase_offsets_keep_a_null_group(
+    spark, sf_dir, tmp_path, monkeypatch, name, tbl, col
+):
+    """The offset joins match a NULL group key to its own offsets, so
+    its rows stay, as DuckDB's GROUP BY / PARTITION BY keeps them."""
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_ROOT", str(tmp_path / "arts"))
+    (tmp_path / "sf").mkdir()
+    nulls = _null_copy(sf_dir, tmp_path / "sf", tbl, {col: 13})
+    _matches_oracle(spark, nulls, name)
+
+
+@pytest.mark.parametrize("path", ["direct", "two_phase"])
+def test_percentile_disc_op_drops_null_prices_like_its_oracle(
+    spark, sf_dir, tmp_path, monkeypatch, path
+):
+    """PERCENTILE_DISC ignores NULL values: the op's oracle ranks and
+    counts only non-NULL prices, as the op does on both paths; a NULL
+    priority is a group of its own on both paths."""
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_ROOT", str(tmp_path / "arts"))
+    if path == "two_phase":
+        monkeypatch.setattr(W, "TWO_PHASE_MIN_ROWS", 0)
+    (tmp_path / "sf").mkdir()
+    nulls = _null_copy(
+        sf_dir, tmp_path / "sf", "orders",
+        {"o_totalprice": 11, "o_orderpriority": 17},
+    )
+    _matches_oracle(spark, nulls, "agg_percentile_disc")
